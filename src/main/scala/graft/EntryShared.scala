@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, TimestampType}
 import graft.core.{Converters, DateSpan, Nm}
 import graft.functions.{Dedup, Layout, Packing, Pii, Sampling, TextAnalysis, Vectors}
 import graft.sources.Sources
+import graft.streaming.Streaming.Monitor
 import graft.tables._
 
 
@@ -53,12 +54,12 @@ private[graft] object EntryShared {
     * state (e.g. 13 stream_* queries share the VolumeMonitor daily-count
     * table; stream_auc / stream_pr_curve / stream_reliability share the
     * AucMonitor per-score counts). Each monitor's `update` materializes its
-    * state eagerly (Bridge.freeze localCheckpoint), so replaying the same 5
-    * batches once per readout re-runs identical jobs N times. This cache
-    * builds each family's state ONCE per (Spark application, sf dir) and
-    * hands every readout the same frozen monitor — exactly the steady-state
-    * shape in production, where one monitor instance serves all its
-    * readouts. Readouts are pure (no state mutation), so results are
+    * state (a Bridge.freeze localCheckpoint, on a helper thread), so
+    * replaying the same 5 batches once per readout re-runs identical jobs
+    * N times. This cache builds each family's state ONCE per (Spark
+    * application, sf dir) and hands every readout the same frozen monitor
+    * — exactly the steady-state shape in production, where one monitor
+    * instance serves all its readouts. Readouts are pure (no state mutation), so results are
     * bit-identical to the uncached build; the parity specs in StreamingSpec
     * still exercise fresh per-test monitors.
     *
@@ -86,7 +87,7 @@ private[graft] object EntryShared {
     // nested get() for a different family cannot deadlock.
     private val locks =
       scala.collection.concurrent.TrieMap.empty[(String, String), Object]
-    def get[M <: AnyRef](s: SparkSession, key: String)(build: => M): M = {
+    def get[M <: Monitor](s: SparkSession, key: String)(build: => M): M = {
       val k = (s.sparkContext.applicationId, key)
       cache.get(k) match {
         case Some(v) => v.asInstanceOf[M]
@@ -95,6 +96,12 @@ private[graft] object EntryShared {
             cache.getOrElseUpdate(k, {
               val before = s.sparkContext.getPersistentRDDs.keySet.toSet
               val m = build
+              // state freezes run on helper threads: wait for them, so
+              // every block the state holds is persisted before the diff
+              // (an unpinned block would fall to a harness's unpersist
+              // sweep) and the cached monitor has no freezes in flight
+              // when concurrent readers share it
+              m.settle()
               (s.sparkContext.getPersistentRDDs.keySet.toSet -- before)
                 .foreach(id => pinned.put(id, ()))
               m

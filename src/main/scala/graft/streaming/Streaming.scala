@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
@@ -15,135 +16,189 @@ import org.apache.spark.sql.Row
   */
 object Streaming {
 
-  /** LSM-shaped keyed monitor state — the fix for the one remaining
-    * per-batch scale defect in the keyed monitors: folding a batch by
-    * `state.union(batch).groupBy(keys).agg(...)` re-aggregates (and
-    * re-materializes) the WHOLE accreted key table every micro-batch, so
-    * per-batch cost grows with history — O(total) per batch, the disease
-    * the round-11 LinkageMonitor fix cured for linkage. Here the state is
-    * instead a LIST of frozen per-batch aggregate deltas: `add` freezes
-    * only the batch's own (already batch-proportional) aggregate —
-    * OVERLAPPED on a helper thread, so independent per-batch jobs
-    * back-fill idle cores instead of serializing on the driver (guide
-    * §2.6; a replayed monitor's five batch aggregations are independent
-    * Spark jobs); `merged` re-aggregates the union once AT READOUT; and
-    * runs compact SIZE-TIERED (round 17): nothing merges until the run
-    * count exceeds `maxDeltas`, then the adjacent pair with the smallest
-    * combined size folds — equal-sized runs pair first, so the
-    * binary-counter amortization (each row rewritten O(log batches) times
-    * over the whole ingest) emerges lazily, while a bounded replay
-    * (≤ maxDeltas batches) never pays a merge job at all. The readout
-    * value is identical for ANY fold grouping (the combine is
-    * associative-commutative re-aggregation of the same rows — the
-    * property the old eager fold already relied on); parity and
-    * checkpoint-restore specs pin it.
+  /** The one monitor-state type: a state table held as a list of frozen
+    * runs plus the freezes still in flight. Every streaming monitor keeps
+    * its state tables here (declared through [[Monitor.state]]), and
+    * [[Monitor]] checkpoints them.
     *
-    * `combine` must re-aggregate a frame with duplicate keys back to
-    * unique keys (same column names in, same out).
+    * `maxDeltas` picks one of two shapes:
+    *  - `maxDeltas = 1`: ONE run. `add` folds the batch aggregate into it
+    *    with a single freeze of `combine(run ∪ batchAgg)` (the first add
+    *    freezes the batch aggregate alone). This is for states bounded by
+    *    something other than history — sketches, moment rows, per-type or
+    *    per-day count tables — where re-aggregating the whole state per
+    *    batch costs about as much as the batch itself.
+    *  - `maxDeltas > 1`: LSM-shaped, for keyed states whose key set
+    *    approaches corpus cardinality. There, folding
+    *    `state ∪ batch → re-aggregate` re-aggregates (and re-materializes)
+    *    the WHOLE accreted table every micro-batch, so per-batch cost
+    *    grows with history. Instead `add` freezes only the batch's own
+    *    (already batch-proportional) aggregate, `merged` re-aggregates the
+    *    union once AT READOUT, and runs compact SIZE-TIERED: nothing merges
+    *    until the run count exceeds `maxDeltas`, then the adjacent pair
+    *    with the smallest combined size folds. Equal-sized runs pair first,
+    *    so the binary-counter amortization (each row rewritten
+    *    O(log batches) times over the whole ingest) emerges lazily, while a
+    *    bounded replay (≤ maxDeltas batches) never pays a merge job.
     *
-    * Threading: all public methods are caller-thread only (the monitor
-    * discipline); only the freeze of `add`'s batch aggregate runs
-    * off-thread, and every read path drains those first, so state reads
-    * and saved checkpoints always see every prior `add`. The helper
-    * thread is spawned per add (inherits the caller's job group, so a
-    * watchdog's cancelJobGroup still reaches these jobs) and a global
-    * gate bounds the overlap.
+    * The readout value is identical for ANY fold grouping: the combine is
+    * an associative-commutative re-aggregation of the same rows, and the
+    * parity and checkpoint-restore specs pin it. `combine` must
+    * re-aggregate a frame with duplicate keys back to unique keys (same
+    * column names in, same out). A state whose next value is not a
+    * union → combine (a carried last-event row, a relabeling) swaps in its
+    * whole next frame with [[replace]].
+    *
+    * Threading: the freeze of each `add` and `replace` runs on a helper
+    * thread, so per-batch jobs overlap the caller's next work (the other
+    * monitors' updates) and back-fill idle cores instead of serializing on
+    * the driver (guide §2.6); forcing every freeze inline made a
+    * monitor-ingest batch 27% slower on 4 vCPUs (median 2868 vs 2251 ms
+    * over 4 alternating pairs). In the one-run shape each freeze first
+    * awaits the previous one, whose run it folds into. A fresh thread per
+    * freeze inherits the caller's job group and local properties, so a
+    * watchdog's cancelJobGroup still reaches its job, and a global gate
+    * bounds the overlap. Every read drains the freezes in ADD ORDER first,
+    * so reads and saved checkpoints see every prior add. The methods lock
+    * the state, so concurrent readers of one shared monitor are safe;
+    * [[settle]] drains without reading.
+    *
+    * Restore and save: a restored run stays a LAZY scan of the checkpoint
+    * files. Freezing on restore would hold a copy of every restored state
+    * in executor memory whether or not anything reads it. The one path
+    * that overwrites checkpoint files is a save, so [[forSave]] freezes
+    * any run that still reads them before it hands the state out; a later
+    * `add` folds the scan into a frozen run anyway.
     */
   private[streaming] final class DeltaState(combine: DataFrame => DataFrame,
-                                            maxDeltas: Int = 8) {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
+                                            maxDeltas: Int) {
+    import DeltaState.{Async, Run}
+    require(maxDeltas >= 1, "maxDeltas must be positive")
     // newest first; each run carries its materialized row count (free at
     // freeze time) — the size-tiered compaction is driven by run sizes
-    private var deltas: List[(DataFrame, Long)] = Nil
-    // batch freezes in flight, oldest first — folded in ADD ORDER at
-    // drain, so the state's union order stays deterministic no matter
-    // which helper finishes first
-    private val pending =
-      scala.collection.mutable.Queue.empty[DeltaState.Async]
+    private var deltas: List[Run] = Nil
+    // freezes in flight, oldest first — folded in ADD ORDER at drain, so
+    // the state's union order stays deterministic no matter which helper
+    // finishes first
+    private val pending = scala.collection.mutable.Queue.empty[Async]
 
-    def isEmpty: Boolean = pending.isEmpty && deltas.isEmpty
+    def isEmpty: Boolean = synchronized(pending.isEmpty && deltas.isEmpty)
 
-    /** fold one batch-proportional aggregate frame into the state; the
-      * materialization job overlaps with whatever the caller does next
+    /** fold one aggregate frame into the state; its freeze overlaps with
+      * whatever the caller does next
       */
-    def add(batchAgg: DataFrame): Unit =
-      if (inlineStateFreeze.get) fold(bridge.freezeCounted(batchAgg))
+    def add(batchAgg: DataFrame): Unit = synchronized {
+      if (maxDeltas > 1) enqueue(() => batchAgg)
       else {
-        pending.enqueue(new DeltaState.Async(batchAgg))
-        // bound the in-flight tail so an unbounded ingest can't accrete
-        // unmaterialized plans
-        if (pending.size > maxDeltas) fold(pending.dequeue().await())
+        // the run this freeze folds into: the previous add's, else the
+        // settled one
+        val prior = pending.lastOption
+        val settled = deltas.headOption
+        enqueue(() => prior.map(_.await()).orElse(settled) match {
+          case None => batchAgg
+          case Some(run) => combine(run.df.unionByName(batchAgg))
+        })
       }
+    }
+
+    /** swap in `next` as the whole state (one-run shape), frozen like an
+      * [[add]]
+      */
+    def replace(next: DataFrame): Unit = synchronized {
+      require(maxDeltas == 1, "replace needs the one-run shape")
+      enqueue(() => next)
+    }
 
     /** like [[add]] for a frame the caller ALREADY froze and counted
       * (freezeCounted) — skips the second, redundant checkpoint copy
       */
-    def addFrozen(frozenDelta: DataFrame, rows: Long): Unit = {
+    def addFrozen(frozenDelta: DataFrame, rows: Long): Unit = synchronized {
+      require(maxDeltas > 1, "addFrozen needs the LSM shape")
       drain()
-      fold((frozenDelta, rows))
+      fold(Run(frozenDelta, rows))
+    }
+
+    /** make one already-frozen frame the whole state */
+    def replaceFrozen(frozen: DataFrame, rows: Long): Unit = synchronized {
+      drain()
+      deltas = Run(frozen, rows) :: Nil
+    }
+
+    private def enqueue(plan: () => DataFrame): Unit = {
+      pending.enqueue(new Async(plan))
+      // bound the in-flight tail so an unbounded ingest can't accrete
+      // unmaterialized plans
+      if (pending.size > maxDeltas) fold(pending.dequeue().await())
     }
 
     private def drain(): Unit =
       while (pending.nonEmpty) fold(pending.dequeue().await())
 
-    private def fold(run: (DataFrame, Long)): Unit = {
-      deltas = run :: deltas
-      // compact only past the cap: merge the adjacent pair with the
-      // smallest combined size (adjacency keeps the deterministic union
-      // order; the combine itself is order-insensitive)
-      while (deltas.sizeIs > maxDeltas) {
-        val idx = deltas.sliding(2).zipWithIndex
-          .minBy { case (p, _) => p.head._2 + p(1)._2 }._2
-        val (pre, rest) = deltas.splitAt(idx)
-        val mergedRun =
-          bridge.freezeCounted(combine(rest.head._1.unionByName(rest(1)._1)))
-        deltas = pre ::: mergedRun :: rest.drop(2)
+    /** wait for every freeze in flight — a shared state must settle before
+      * its persisted blocks can be accounted
+      */
+    def settle(): Unit = synchronized(drain())
+
+    private def fold(run: Run): Unit =
+      if (maxDeltas == 1) deltas = run :: Nil // the run already holds its predecessor
+      else {
+        deltas = run :: deltas
+        // compact only past the cap: merge the adjacent pair with the
+        // smallest combined size (adjacency keeps the deterministic union
+        // order; the combine itself is order-insensitive)
+        while (deltas.sizeIs > maxDeltas) {
+          val idx = deltas.sliding(2).zipWithIndex
+            .minBy { case (p, _) => p.head.rows + p(1).rows }._2
+          val (pre, rest) = deltas.splitAt(idx)
+          val (df, n) =
+            Bridge.freezeCounted(combine(rest.head.df.unionByName(rest(1).df)))
+          deltas = pre ::: Run(df, n) :: rest.drop(2)
+        }
       }
+
+    private def view: Option[DataFrame] = deltas match {
+      case Nil => None
+      case one :: Nil => Some(one.df)
+      case many => Some(combine(many.map(_.df).reduce(_ unionByName _)))
     }
 
     /** the unique-key state view (aggregates the pending deltas) */
-    def merged: DataFrame = {
+    def merged: DataFrame = synchronized {
       drain()
-      deltas.map(_._1) match {
-        case Nil => throw new IllegalStateException("no batches ingested")
-        case one :: Nil => one
-        case many => combine(many.reduce(_ unionByName _))
-      }
+      view.getOrElse(throw new IllegalStateException("no batches ingested"))
     }
 
-    /** replace the state with one restored frame (checkpoint load). The
-      * frame is FROZEN here: a restored state is typically a live parquet
-      * scan of the checkpoint directory, and the next `saveState`
-      * overwrite would delete the very files a lazy delta still reads —
-      * freezing decouples the state from the checkpoint's storage.
+    /** replace the state with one checkpointed frame (or none), kept as a
+      * lazy scan
       */
-    def reset(frame: Option[DataFrame]): Unit = {
+    def restore(frame: Option[DataFrame]): Unit = synchronized {
       drain()
-      deltas = frame.map(bridge.freezeCounted).toList
+      deltas = frame.map(Run(_, DeltaState.Unsized, restored = true)).toList
     }
 
-    /** the state as a single frame for checkpointing (None when empty) */
-    def forSave: Option[DataFrame] = {
+    /** the state as a single frame for checkpointing (None when empty);
+      * first freezes any run that still scans checkpoint files, because
+      * the save may overwrite them
+      */
+    def forSave: Option[DataFrame] = synchronized {
       drain()
-      if (deltas.isEmpty) None
-      else if (deltas.tail.isEmpty) Some(deltas.head._1)
-      else Some(combine(deltas.map(_._1).reduce(_ unionByName _)))
+      deltas = deltas.map { r =>
+        if (!r.restored) r
+        else { val (df, n) = Bridge.freezeCounted(r.df); Run(df, n) }
+      }
+      view
     }
   }
 
-  /** When true on the calling thread, monitor-state adds materialize
-    * INLINE instead of on a helper thread. State caches that account
-    * pinned RDD ids by diffing `getPersistentRDDs` around a build
-    * (SparkEntry.ReplayCache) must set this for the build's duration:
-    * an overlapped freeze finishing after the diff would leave its
-    * checkpointed blocks unpinned, and a bench harness's inter-query
-    * unpersist sweep would drop blocks the cached state still needs
-    * (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on the next reader).
-    */
-  val inlineStateFreeze: ThreadLocal[java.lang.Boolean] =
-    ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
-
   private[streaming] object DeltaState {
+    /** a frozen run and its row count; a restored run is a lazy scan */
+    final case class Run(df: DataFrame, rows: Long, restored: Boolean = false)
+
+    // a restored run's size is unknown without a job; it holds all the
+    // history before its checkpoint, so it ranks as the largest run and
+    // merges last
+    private val Unsized = Long.MaxValue / 4
+
     /** at most this many freeze jobs overlap JVM-wide — enough to fill a
       * stage tail, not enough to thrash the scheduler (guide §2.6)
       */
@@ -152,26 +207,44 @@ object Streaming {
     /** one freeze job on its own thread. A fresh Thread (not a pool)
       * inherits the caller's SparkContext local properties — job group,
       * description — so cancellation and UI labels behave exactly as if
-      * the caller ran the job itself.
+      * the caller ran the job itself. `plan` runs on the thread before it
+      * takes a gate slot, so a freeze waiting for its predecessor's run
+      * never holds one.
       */
-    private[streaming] final class Async(batchAgg: DataFrame) {
-      @volatile private var result: Either[Throwable, (DataFrame, Long)] = _
+    final class Async(plan: () => DataFrame) {
+      @volatile private var result: Either[Throwable, Run] = _
       private val t = new Thread(() => {
-        gate.acquire()
-        try result = Right(org.apache.spark.sql.graftbridge.Bridge.freezeCounted(batchAgg))
-        catch { case e: Throwable => result = Left(e) }
-        finally gate.release()
+        try {
+          val df = plan()
+          gate.acquire()
+          try {
+            val (frozen, n) = Bridge.freezeCounted(df)
+            result = Right(Run(frozen, n))
+          } finally gate.release()
+        } catch { case e: Throwable => result = Left(e) }
       }, "graft-delta-freeze")
       t.setDaemon(true)
       t.start()
 
-      def await(): (DataFrame, Long) = {
+      def await(): Run = {
         t.join()
         result match {
           case Right(r) => r
           case Left(e) => throw e
         }
       }
+    }
+
+    /** combine for one-row moment states: every column summed */
+    val sumAll: DataFrame => DataFrame = d => {
+      val summed = d.columns.map(c => sum(col(c)).as(c))
+      d.agg(summed.head, summed.tail: _*)
+    }
+
+    /** combine for keyed count tables: each of `values` summed per `keys` */
+    def sumBy(keys: String*)(values: String*): DataFrame => DataFrame = d => {
+      val summed = values.map(v => sum(col(v)).as(v))
+      d.groupBy(keys.map(col): _*).agg(summed.head, summed.tail: _*)
     }
   }
 
@@ -180,24 +253,22 @@ object Streaming {
     * `checkpointLocation` decides WHICH micro-batches replay after a
     * restart, and this persists the monitor's state tables so the restored
     * object resumes from exactly the batches the source will not re-feed.
-    * Call `save` after each `update` (the state is frozen by then, so the
-    * overwrite never deletes files the live state still reads); the marker
-    * file is written LAST, so a kill mid-save leaves no marker and
-    * `restore` reports the checkpoint unusable instead of loading a torn
-    * state.
+    * The marker file is written LAST, so a kill mid-save leaves no marker
+    * and `restore` reports the checkpoint unusable instead of loading a
+    * torn state.
     */
   object MonitorState {
     import java.nio.file.{Files, Paths}
     private val Marker = "_STATE_OK"
 
-    def save(dir: String, tables: Map[String, Option[DataFrame]]): Unit = {
+    def save(dir: String, tables: Seq[(String, Option[DataFrame])]): Unit = {
       Files.createDirectories(Paths.get(dir))
       Files.deleteIfExists(Paths.get(dir, Marker))
       val present = tables.collect { case (n, Some(df)) => n -> df }
       present.foreach { case (n, df) =>
         df.write.mode("overwrite").parquet(s"$dir/$n")
       }
-      Files.writeString(Paths.get(dir, Marker), present.keys.mkString(","))
+      Files.writeString(Paths.get(dir, Marker), present.map(_._1).mkString(","))
     }
 
     /** true iff `dir` holds a complete (marker-sealed) state checkpoint */
@@ -208,6 +279,36 @@ object Streaming {
       val names = Files.readString(Paths.get(dir, Marker)).split(",").toSet
       if (names.contains(name)) Some(spark.read.parquet(s"$dir/$name")) else None
     }
+  }
+
+  /** The one monitor contract. A monitor declares each state table with
+    * [[state]]; this trait checkpoints, restores and settles them all, so
+    * no monitor hand-writes its own. Call `saveState` after each `update`
+    * (a save into the directory a restore read from is safe: see
+    * [[DeltaState]]).
+    */
+  trait Monitor {
+    private val states = scala.collection.mutable.ArrayBuffer.empty[(String, DeltaState)]
+
+    /** declare a state table, checkpointed under `name` */
+    private[streaming] def state(name: String,
+                                 combine: DataFrame => DataFrame = identity,
+                                 maxDeltas: Int = 1): DeltaState = {
+      val s = new DeltaState(combine, maxDeltas)
+      states += name -> s
+      s
+    }
+
+    /** persist every state table for crash-restart (call after update) */
+    def saveState(dir: String): Unit =
+      MonitorState.save(dir, states.toSeq.map { case (n, s) => n -> s.forSave })
+
+    /** restore every state table from a [[saveState]] checkpoint */
+    def restoreState(spark: SparkSession, dir: String): Unit =
+      states.foreach { case (n, s) => s.restore(MonitorState.load(spark, dir, n)) }
+
+    /** wait for every state freeze still in flight */
+    def settle(): Unit = states.foreach(_._2.settle())
   }
 
   /** Windowed event-time aggregation with late-data handling: the streaming
@@ -283,35 +384,37 @@ object Streaming {
     * row-bounded — re-frozen per batch via the dimension tables'
     * checkpoint discipline.
     */
-  class DriftMonitor(reference: DataFrame, textCol: String, topK: Int = 15) {
+  class DriftMonitor(reference: DataFrame, textCol: String, topK: Int = 15)
+      extends Monitor {
     import graft.functions.TextAnalysis
     private val spark0 = reference.sparkSession
-    private val refCounts = org.apache.spark.sql.graftbridge.Bridge.freeze(
+    private val refCounts = Bridge.freeze(
       reference.select(explode(TextAnalysis.tokens(col(textCol))).as("token"))
         .filter(col("token") =!= "")
         .groupBy(col("token")).agg(count(lit(1)).as("c_ref")))
-    private var running: DataFrame = spark0.createDataFrame(
+    private val running = state("running")
+    running.replaceFrozen(spark0.createDataFrame(
       spark0.sparkContext.emptyRDD[Row],
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("token",
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("c_run",
-          org.apache.spark.sql.types.LongType))))
+          org.apache.spark.sql.types.LongType)))), 0L)
 
     /** merge one micro-batch's tokens into the running distribution */
     def update(batch: DataFrame): Unit = {
       val bc = batch.select(explode(TextAnalysis.tokens(col(textCol))).as("token"))
         .filter(col("token") =!= "")
         .groupBy(col("token")).agg(count(lit(1)).as("c_b"))
-      running = org.apache.spark.sql.graftbridge.Bridge.freeze(
-        running.join(bc, Seq("token"), "full_outer")
+      running.replace(
+        running.merged.join(bc, Seq("token"), "full_outer")
           .select(col("token"),
             (coalesce(col("c_run"), lit(0L)) + coalesce(col("c_b"), lit(0L))).as("c_run")))
     }
 
     /** top KL(running ‖ reference) contributors under add-one smoothing */
     def drift(): DataFrame = {
-      val joint = running.join(refCounts, Seq("token"), "full_outer")
+      val joint = running.merged.join(refCounts, Seq("token"), "full_outer")
         .select(col("token"),
           coalesce(col("c_run"), lit(0L)).as("c_run"),
           coalesce(col("c_ref"), lit(0L)).as("c_ref"))
@@ -341,33 +444,19 @@ object Streaming {
     * full-corpus pass, with no distinct-key state to spill. Wire with
     * [[foreachBatchMerge]]`(stream, cm.update)`.
     */
-  class CardinalityMonitor(keyCol: String, b: Int = 8) {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var regs: Option[DataFrame] = None
+  class CardinalityMonitor(keyCol: String, b: Int = 8) extends Monitor {
+    private val regs = state("regs",
+      _.groupBy(col("bucket")).agg(max(col("reg")).as("reg")))
 
     /** fold one micro-batch into the register state */
-    def update(batch: DataFrame): Unit = {
-      val br = graft.functions.Stats.hllRegisters(batch, keyCol, b)
-      regs = Some(bridge.freeze(regs match {
-        case None => br
-        case Some(r) => r.unionAll(br).groupBy(col("bucket"))
-          .agg(max(col("reg")).as("reg"))
-      }))
-    }
+    def update(batch: DataFrame): Unit =
+      regs.add(graft.functions.Stats.hllRegisters(batch, keyCol, b))
 
     /** current register table (2^b rows) */
-    def registers: DataFrame = regs.getOrElse(
-      throw new IllegalStateException("no batches ingested"))
+    def registers: DataFrame = regs.merged
 
     /** current (m, zero_registers, est_distinct) estimate */
     def estimate: DataFrame = graft.functions.Stats.hllEstimate(registers, b)
-
-    /** persist the register state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("regs" -> regs))
-
-    /** restore register state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      regs = MonitorState.load(spark, dir, "regs")
   }
 
   /** Streaming incremental connected components — maintain the near-dup
@@ -392,18 +481,18 @@ object Streaming {
     * label state plus the contracted solve. Wire with
     * [[foreachBatchMerge]]`(stream, cm.update)`.
     */
-  class ComponentMonitor(idA: String = "id_a", idB: String = "id_b") {
+  class ComponentMonitor(idA: String = "id_a", idB: String = "id_b")
+      extends Monitor {
     import graft.functions.Dedup
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var labels: Option[DataFrame] = None
+    private val labels = state("labels")
 
     /** fold one batch of pair rows into the labeling */
     def update(pairs: DataFrame): Unit = {
       val e = pairs.select(col(idA).cast("long").as("src"),
         col(idB).cast("long").as("dst"))
-      labels = Some(bridge.freeze(labels match {
-        case None => Dedup.connectedComponents(e, "src", "dst")
-        case Some(l) =>
+      labels.replace(if (labels.isEmpty) Dedup.connectedComponents(e, "src", "dst")
+        else {
+          val l = labels.merged
           val la = l.select(col("node").as("src"), col("label").as("__la"))
           val lb = l.select(col("node").as("dst"), col("label").as("__lb"))
           val contracted = e.join(la, Seq("src"), "left").join(lb, Seq("dst"), "left")
@@ -417,12 +506,11 @@ object Streaming {
             .select(col("node"), coalesce(col("__nl"), col("label")).as("label"))
           val fresh = solved.join(l.select(col("node")), Seq("node"), "left_anti")
           rewritten.unionByName(fresh)
-      }))
+        })
     }
 
     /** current labeling: (node, label) — label is the component's smallest id */
-    def components: DataFrame = labels.getOrElse(
-      throw new IllegalStateException("no batches ingested"))
+    def components: DataFrame = labels.merged
   }
 
   /** Streaming cohort retention — maintain the (cohort_day, offset_days,
@@ -442,12 +530,13 @@ object Streaming {
     * into the state; re-frozen per batch so lineage stays flat. Wire with
     * [[foreachBatchMerge]]`(stream, rm.update)`.
     */
-  class RetentionMonitor(userCol: String = "user_id", tsCol: String = "ts") {
+  class RetentionMonitor(userCol: String = "user_id", tsCol: String = "ts")
+      extends Monitor {
     // the (user, day) activity key set approaches corpus cardinality: LSM
     // delta state ([[DeltaState]]) keeps per-batch work batch-proportional
     // instead of re-writing the whole accreted set every micro-batch
     // (distinct IS the associative re-aggregation for a key SET)
-    private val activity = new DeltaState(_.distinct())
+    private val activity = state("activity", _.distinct(), maxDeltas = 8)
 
     /** fold one micro-batch of raw events into the activity state */
     def update(batch: DataFrame): Unit =
@@ -465,14 +554,6 @@ object Streaming {
     def stickiness(windowDays: Int = 7): DataFrame =
       graft.functions.Events.stickinessOfActivity(activity.merged, userCol,
         windowDays)
-
-    /** persist the activity state for crash-restart (call after update) */
-    def saveState(dir: String): Unit =
-      MonitorState.save(dir, Map("activity" -> activity.forSave))
-
-    /** restore activity state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      activity.reset(MonitorState.load(spark, dir, "activity"))
   }
 
   /** Streaming volume-anomaly monitor — maintain the (event_type, day)
@@ -491,28 +572,19 @@ object Streaming {
     * so lineage stays flat. Wire with [[foreachBatchMerge]]`(stream,
     * vm.update)`.
     */
-  class VolumeMonitor(typeCol: String = "event_type", tsCol: String = "ts") {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var daily: Option[DataFrame] = None
+  class VolumeMonitor(typeCol: String = "event_type", tsCol: String = "ts")
+      extends Monitor {
+    private val daily = state("daily", DeltaState.sumBy("event_type", "day")("n"))
 
     /** fold one micro-batch of raw events into the count state */
-    def update(batch: DataFrame): Unit = {
-      val bd = batch
+    def update(batch: DataFrame): Unit =
+      daily.add(batch
         .groupBy(col(typeCol).as("event_type"), to_date(col(tsCol)).as("day"))
-        .agg(count(lit(1)).as("n"))
-      daily = Some(bridge.freeze(daily match {
-        case None => bd
-        case Some(d) => d.unionByName(bd)
-          .groupBy(col("event_type"), col("day"))
-          .agg(sum(col("n")).as("n"))
-      }))
-    }
+        .agg(count(lit(1)).as("n")))
 
     /** current (event_type, day, n, z, is_anomaly) verdicts */
     def anomalies(zThreshold: Double = 2.0): DataFrame =
-      graft.functions.Events.anomaliesOfDaily(
-        daily.getOrElse(throw new IllegalStateException("no batches ingested")),
-        zThreshold)
+      graft.functions.Events.anomaliesOfDaily(daily.merged, zThreshold)
 
     /** second readout off the SAME accreted count state: the seasonal-naive
       * forecast audit ([[graft.functions.Events.forecastOfDaily]]) — daily
@@ -521,9 +593,7 @@ object Streaming {
       * [[graft.functions.Events.seasonalForecast]]
       */
     def forecast(period: Int = 7): DataFrame =
-      graft.functions.Events.forecastOfDaily(
-        daily.getOrElse(throw new IllegalStateException("no batches ingested")),
-        "event_type", period)
+      graft.functions.Events.forecastOfDaily(daily.merged, "event_type", period)
 
     /** third readout off the accreted count state: CUSUM creep detection
       * ([[graft.functions.Events.cusumOfDaily]]) — the slow-drift alarm
@@ -535,14 +605,10 @@ object Streaming {
       * counts' additivity makes it batch-exact once a day's events land
       */
     def ewma(lambda: Double = 0.2, limitSigmas: Double = 3.0): DataFrame =
-      graft.functions.Events.ewmaOfDaily(
-        daily.getOrElse(throw new IllegalStateException("no batches ingested")),
-        lambda, limitSigmas)
+      graft.functions.Events.ewmaOfDaily(daily.merged, lambda, limitSigmas)
 
     def cusum(slack: Double = 0.5, threshold: Double = 3.0): DataFrame =
-      graft.functions.Events.cusumOfDaily(
-        daily.getOrElse(throw new IllegalStateException("no batches ingested")),
-        slack, threshold)
+      graft.functions.Events.cusumOfDaily(daily.merged, slack, threshold)
 
     /** Page–Hinkley drift readout off the accreted count state
       * ([[graft.functions.Events.phOfDaily]]) — the running-mean change
@@ -550,9 +616,7 @@ object Streaming {
       * batch-exact once a day's events land
       */
     def pageHinkley(delta: Double = 0.5, lambda: Double = 20.0): DataFrame =
-      graft.functions.Events.phOfDaily(
-        daily.getOrElse(throw new IllegalStateException("no batches ingested")),
-        delta, lambda)
+      graft.functions.Events.phOfDaily(daily.merged, delta, lambda)
 
     /** MASE forecast-accuracy readout off the accreted count state
       * ([[graft.functions.Events.maseOfDaily]]) — the scaled companion
@@ -560,9 +624,7 @@ object Streaming {
       * batch-exact once a day's events land
       */
     def mase(period: Int = 7): DataFrame =
-      graft.functions.Events.maseOfDaily(
-        daily.getOrElse(throw new IllegalStateException("no batches ingested")),
-        period)
+      graft.functions.Events.maseOfDaily(daily.merged, period)
 
     /** Wald–Wolfowitz randomness readout off the accreted count state
       * ([[graft.functions.Events.runsOfDaily]]) — is the daily series
@@ -570,8 +632,7 @@ object Streaming {
       * CUSUM/EWMA alarms; additivity makes it batch-exact
       */
     def runs: DataFrame =
-      graft.functions.Events.runsOfDaily(
-        daily.getOrElse(throw new IllegalStateException("no batches ingested")))
+      graft.functions.Events.runsOfDaily(daily.merged)
 
     /** p-chart readout off the accreted count state
       * ([[graft.functions.Events.pchartOfDaily]]) — per-day control
@@ -579,9 +640,7 @@ object Streaming {
       * alarm next to the count alarms; additivity makes it batch-exact
       */
     def pchart(targetType: String, sigmas: Double = 3.0): DataFrame =
-      graft.functions.Events.pchartOfDaily(
-        daily.getOrElse(throw new IllegalStateException("no batches ingested")),
-        targetType, sigmas)
+      graft.functions.Events.pchartOfDaily(daily.merged, targetType, sigmas)
 
     /** mix-evenness readout off the accreted count state
       * ([[graft.functions.Events.evennessOfDaily]]) — each day's
@@ -589,8 +648,7 @@ object Streaming {
       * the p-chart's single-type alarm; additivity makes it batch-exact
       */
     def evenness: DataFrame =
-      graft.functions.Events.evennessOfDaily(
-        daily.getOrElse(throw new IllegalStateException("no batches ingested")))
+      graft.functions.Events.evennessOfDaily(daily.merged)
 
     /** fifth readout off the accreted count state: the Mann–Kendall
       * monotonic-trend verdict + Theil–Sen slope
@@ -599,8 +657,7 @@ object Streaming {
       * additivity makes it batch-exact once a day's events land
       */
     def trend: DataFrame =
-      graft.functions.Events.mkOfDaily(
-        daily.getOrElse(throw new IllegalStateException("no batches ingested")))
+      graft.functions.Events.mkOfDaily(daily.merged)
 
     /** sixth readout off the accreted count state: the autocorrelation
       * function at lags 1..maxLag
@@ -609,17 +666,14 @@ object Streaming {
       * additivity
       */
     def autocorrelation(maxLag: Int = 7): DataFrame =
-      graft.functions.Events.acfOfDaily(
-        daily.getOrElse(throw new IllegalStateException("no batches ingested")),
-        maxLag)
+      graft.functions.Events.acfOfDaily(daily.merged, maxLag)
 
     /** seventh readout off the accreted count state: the Pettitt
       * changepoint verdict ([[graft.functions.Events.pettittOfDaily]]) —
       * WHICH day the level shifted; batch-exact by the same additivity
       */
     def changepoint: DataFrame =
-      graft.functions.Events.pettittOfDaily(
-        daily.getOrElse(throw new IllegalStateException("no batches ingested")))
+      graft.functions.Events.pettittOfDaily(daily.merged)
 
     /** fourteenth readout off the accreted count state: Holt's linear
       * level+trend smoothing and one-step volume forecast
@@ -629,9 +683,7 @@ object Streaming {
       * additivity
       */
     def holt(alpha: Double = 0.5, beta: Double = 0.5): DataFrame =
-      graft.functions.Events.holtOfDaily(
-        daily.getOrElse(throw new IllegalStateException("no batches ingested")),
-        alpha, beta)
+      graft.functions.Events.holtOfDaily(daily.merged, alpha, beta)
 
     /** fifteenth readout: Benjamini–Hochberg FDR control
       * ([[graft.functions.Stats.bhAdjust]]) across the per-type Pettitt
@@ -641,9 +693,7 @@ object Streaming {
       */
     def fdrControl(q: Double = 0.05): DataFrame =
       graft.functions.Stats.bhAdjust(
-        graft.functions.Events.pettittOfDaily(
-          daily.getOrElse(throw new IllegalStateException("no batches ingested"))),
-        "event_type", "p_approx", q)
+        graft.functions.Events.pettittOfDaily(daily.merged), "event_type", "p_approx", q)
 
     /** seventeenth readout off the accreted count state: the per-type
       * burstiness profile ([[graft.functions.Events.burstinessOfDaily]])
@@ -652,8 +702,7 @@ object Streaming {
       * batch-exact by the same additivity
       */
     def burstiness: DataFrame =
-      graft.functions.Events.burstinessOfDaily(
-        daily.getOrElse(throw new IllegalStateException("no batches ingested")))
+      graft.functions.Events.burstinessOfDaily(daily.merged)
 
     /** sixteenth readout: the Bonferroni/Holm/Benjamini–Yekutieli
       * adjustment family ([[graft.functions.Stats.padjust]]) across the
@@ -663,9 +712,7 @@ object Streaming {
       */
     def familywiseControl: DataFrame =
       graft.functions.Stats.padjust(
-        graft.functions.Events.pettittOfDaily(
-          daily.getOrElse(throw new IllegalStateException("no batches ingested"))),
-        "event_type", "p_approx")
+        graft.functions.Events.pettittOfDaily(daily.merged), "event_type", "p_approx")
 
     /** eighth readout off the accreted count state: the Ljung–Box
       * portmanteau Q ([[graft.functions.Events.ljungBoxOfDaily]]) — "is
@@ -673,9 +720,7 @@ object Streaming {
       * batch-exact by the same additivity
       */
     def whiteNoise(maxLag: Int = 7): DataFrame =
-      graft.functions.Events.ljungBoxOfDaily(
-        daily.getOrElse(throw new IllegalStateException("no batches ingested")),
-        maxLag)
+      graft.functions.Events.ljungBoxOfDaily(daily.merged, maxLag)
 
     /** ninth readout off the accreted count state: Durbin–Watson on the
       * detrended series ([[graft.functions.Events.dwOfDaily]]) — do the
@@ -683,8 +728,7 @@ object Streaming {
       * batch-exact by the same additivity
       */
     def residualAutocorr: DataFrame =
-      graft.functions.Events.dwOfDaily(
-        daily.getOrElse(throw new IllegalStateException("no batches ingested")))
+      graft.functions.Events.dwOfDaily(daily.merged)
 
     /** tenth readout off the accreted count state: the Wilcoxon
       * signed-rank verdict between two types' paired daily volumes
@@ -692,9 +736,7 @@ object Streaming {
       * additivity
       */
     def pairedShift(typeA: String, typeB: String): DataFrame =
-      graft.functions.Events.wsrOfDaily(
-        daily.getOrElse(throw new IllegalStateException("no batches ingested")),
-        typeA, typeB)
+      graft.functions.Events.wsrOfDaily(daily.merged, typeA, typeB)
 
     /** eleventh readout off the accreted count state: the sign test over
       * the same paired daily diffs
@@ -702,9 +744,7 @@ object Streaming {
       * floor under [[pairedShift]]
       */
     def pairedSign(typeA: String, typeB: String): DataFrame =
-      graft.functions.Events.signOfDaily(
-        daily.getOrElse(throw new IllegalStateException("no batches ingested")),
-        typeA, typeB)
+      graft.functions.Events.signOfDaily(daily.merged, typeA, typeB)
 
     /** twelfth readout off the accreted count state: the Friedman rank
       * test + Kendall's W across ALL types' daily volumes
@@ -713,8 +753,7 @@ object Streaming {
       * additivity
       */
     def concordance: DataFrame =
-      graft.functions.Events.friedmanOfDaily(
-        daily.getOrElse(throw new IllegalStateException("no batches ingested")))
+      graft.functions.Events.friedmanOfDaily(daily.merged)
 
     /** thirteenth readout off the accreted count state: Page's L ordered
       * trend across the types' daily ranks
@@ -723,15 +762,7 @@ object Streaming {
       * additivity
       */
     def pageTrend: DataFrame =
-      graft.functions.Events.pageOfDaily(
-        daily.getOrElse(throw new IllegalStateException("no batches ingested")))
-
-    /** persist the count state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("daily" -> daily))
-
-    /** restore count state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      daily = MonitorState.load(spark, dir, "daily")
+      graft.functions.Events.pageOfDaily(daily.merged)
   }
 
   /** Streaming key-concentration monitor — per-key counts are ADDITIVE, so
@@ -749,12 +780,11 @@ object Streaming {
     * lineage stays flat. Wire with [[foreachBatchMerge]]`(stream,
     * km.update)`.
     */
-  class KeyCountMonitor(keyCol: String) {
+  class KeyCountMonitor(keyCol: String) extends Monitor {
     // |keys| can be corpus-scale (user ids): LSM delta state keeps
     // per-batch work batch-proportional; the keyed sum is the associative
     // re-aggregation
-    private val counts = new DeltaState(
-      _.groupBy(col("key")).agg(sum(col("cnt")).as("cnt")))
+    private val counts = state("counts", DeltaState.sumBy("key")("cnt"), maxDeltas = 8)
 
     /** fold one micro-batch of raw rows into the count state */
     def update(batch: DataFrame): Unit =
@@ -781,14 +811,6 @@ object Streaming {
       */
     def tail(k: Int = 100): DataFrame =
       graft.functions.Stats.hillOfCounts(counts.merged, k)
-
-    /** persist the count state for crash-restart (call after update) */
-    def saveState(dir: String): Unit =
-      MonitorState.save(dir, Map("counts" -> counts.forSave))
-
-    /** restore count state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      counts.reset(MonitorState.load(spark, dir, "counts"))
   }
 
   /** Streaming data-quality monitor — the continuous form of
@@ -798,10 +820,10 @@ object Streaming {
     * to the batch audit. State is |columns| rows — constant. Wire with
     * [[foreachBatchMerge]]`(stream, npm.update)`.
     */
-  class NullProfileMonitor(colsToCheck: Seq[String]) {
+  class NullProfileMonitor(colsToCheck: Seq[String]) extends Monitor {
     require(colsToCheck.nonEmpty, "need at least one column")
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var counters: Option[DataFrame] = None
+    private val counters = state("counters",
+      DeltaState.sumBy("col_name")("n_rows", "n_null", "n_empty"))
 
     /** fold one micro-batch into the per-column counters */
     def update(batch: DataFrame): Unit = {
@@ -809,36 +831,21 @@ object Streaming {
         sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__nl_$c"),
         sum(when(col(c).cast("string") === "", 1L).otherwise(0L)).as(s"__em_$c")))
       val row = batch.agg(aggs.head, aggs.tail: _*)
-      val bc = colsToCheck.map(c => row.select(lit(c).as("col_name"),
+      counters.add(colsToCheck.map(c => row.select(lit(c).as("col_name"),
           col("__n").as("n_rows"), col(s"__nl_$c").as("n_null"),
           col(s"__em_$c").as("n_empty")))
-        .reduce(_.unionAll(_))
-      counters = Some(bridge.freeze(counters match {
-        case None => bc
-        case Some(st) => st.unionByName(bc)
-          .groupBy(col("col_name"))
-          .agg(sum(col("n_rows")).as("n_rows"), sum(col("n_null")).as("n_null"),
-            sum(col("n_empty")).as("n_empty"))
-      }))
+        .reduce(_.unionAll(_)))
     }
 
     /** current per-column profile — equals the batch nullProfile */
     def profile: DataFrame = {
-      val st = counters.getOrElse(
-        throw new IllegalStateException("no batches ingested"))
+      val st = counters.merged
       st.select(col("col_name"), col("n_rows"), col("n_null"), col("n_empty"),
         round(when(col("n_rows") === 0, lit(0.0))
           .otherwise(col("n_null").cast("double") / col("n_rows"))
           .cast(org.apache.spark.sql.types.DecimalType(18, 8)), 4)
           .cast("double").as("null_frac"))
     }
-
-    /** persist the counter state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("counters" -> counters))
-
-    /** restore counter state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      counters = MonitorState.load(spark, dir, "counters")
   }
 
   /** Streaming benchmark-contamination monitor — continuous
@@ -857,30 +864,19 @@ object Streaming {
                              benchText: String, trainId: String,
                              trainText: String,
                              k: Int = 4, window: Int = 4, minShared: Int = 5,
-                             maxDocsPerFp: Int = 100) {
+                             maxDocsPerFp: Int = 100) extends Monitor {
     import graft.functions.Dedup
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private val benchIdx = bridge.freeze(
+    private val benchIdx = Bridge.freeze(
       Dedup.benchFingerprintIndex(bench, benchId, benchText, k, window, maxDocsPerFp))
-    private var found: Option[DataFrame] = None
+    private val found = state("found")
 
     /** match one micro-batch of training docs against the benchmark index */
-    def update(batch: DataFrame): Unit = {
-      val m = Dedup.contaminationAgainstIndex(batch, trainId, trainText,
-        benchIdx, k, window, minShared)
-      found = Some(bridge.freeze(found.map(_.unionByName(m)).getOrElse(m)))
-    }
+    def update(batch: DataFrame): Unit =
+      found.add(Dedup.contaminationAgainstIndex(batch, trainId, trainText,
+        benchIdx, k, window, minShared))
 
     /** all (train_id, bench_id, shared) contamination hits so far */
-    def matches: DataFrame = found.getOrElse(
-      throw new IllegalStateException("no batches ingested"))
-
-    /** persist the match state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("found" -> found))
-
-    /** restore match state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      found = MonitorState.load(spark, dir, "found")
+    def matches: DataFrame = found.merged
   }
 
   /** Streaming Benford monitor — continuous fabricated-numbers screening:
@@ -890,27 +886,19 @@ object Streaming {
     * digit profile drifts mid-stream changed its generator. Wire with
     * [[foreachBatchMerge]]`(stream, bm.update)`.
     */
-  class BenfordMonitor(valueCol: String) {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var counts: Option[DataFrame] = None
+  class BenfordMonitor(valueCol: String) extends Monitor {
+    private val counts = state("counts", DeltaState.sumBy("digit")("n"))
 
     /** fold one micro-batch's first digits into the ≤9-row count state */
-    def update(batch: DataFrame): Unit = {
-      val bc = batch.select(floor(col(valueCol)).cast("long").as("__n"))
+    def update(batch: DataFrame): Unit =
+      counts.add(batch.select(floor(col(valueCol)).cast("long").as("__n"))
         .filter(col("__n") >= 1)
         .select(substring(col("__n").cast("string"), 1, 1).cast("int").as("digit"))
-        .groupBy(col("digit")).agg(count(lit(1)).as("n"))
-      counts = Some(bridge.freeze(counts match {
-        case None => bc
-        case Some(c) => c.unionByName(bc)
-          .groupBy(col("digit")).agg(sum(col("n")).as("n"))
-      }))
-    }
+        .groupBy(col("digit")).agg(count(lit(1)).as("n")))
 
     /** current deviation table — equals the batch benfordAudit */
     def audit: DataFrame = {
-      val st = counts.getOrElse(
-        throw new IllegalStateException("no batches ingested"))
+      val st = counts.merged
       val dec = org.apache.spark.sql.types.DecimalType(18, 8)
       val tot = broadcast(st.agg(sum(col("n")).as("__tot")))
       st.sparkSession.range(1, 10).select(col("id").cast("int").as("digit"))
@@ -925,13 +913,6 @@ object Streaming {
         .withColumn("dev",
           round((col("obs_frac") - col("exp_frac")).cast(dec), 6).cast("double"))
     }
-
-    /** persist the count state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("counts" -> counts))
-
-    /** restore count state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      counts = MonitorState.load(spark, dir, "counts")
   }
 
   /** Streaming PSI drift monitor — "has the live feature's distribution
@@ -943,39 +924,25 @@ object Streaming {
     * everything seen. State is |bins| rows — constant w.r.t. stream
     * length. Wire with [[foreachBatchMerge]]`(stream, pm.update)`.
     */
-  class PsiMonitor(reference: DataFrame, valueCol: String, width: Double) {
+  class PsiMonitor(reference: DataFrame, valueCol: String, width: Double)
+      extends Monitor {
     require(width > 0, "width must be positive")
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private val refBins = bridge.freeze(
+    private val refBins = Bridge.freeze(
       graft.functions.Stats.psiBins(reference, valueCol, width, "ca"))
-    private var counts: Option[DataFrame] = None
+    private val counts = state("counts", DeltaState.sumBy("bin")("cb"))
 
     /** fold one micro-batch's fixed-width bin counts into the state */
-    def update(batch: DataFrame): Unit = {
-      val bc = graft.functions.Stats.psiBins(batch, valueCol, width, "cb")
-      counts = Some(bridge.freeze(counts match {
-        case None => bc
-        case Some(c) => c.unionByName(bc)
-          .groupBy(col("bin")).agg(sum(col("cb")).as("cb"))
-      }))
-    }
+    def update(batch: DataFrame): Unit =
+      counts.add(graft.functions.Stats.psiBins(batch, valueCol, width, "cb"))
 
     /** current PSI vs the frozen reference — equals the batch psiDrift */
     def drift: DataFrame = {
-      val st = counts.getOrElse(
-        throw new IllegalStateException("no batches ingested"))
+      val st = counts.merged
       graft.functions.Stats.psiOfBins(
         refBins.join(st, Seq("bin"), "full_outer")
           .select(col("bin"), coalesce(col("ca"), lit(0L)).as("ca"),
             coalesce(col("cb"), lit(0L)).as("cb")))
     }
-
-    /** persist the stream-side bin state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("counts" -> counts))
-
-    /** restore stream-side bin state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      counts = MonitorState.load(spark, dir, "counts")
   }
 
   /** Streaming Gumbel-top-k selection — continuous softmax sampling over
@@ -988,31 +955,18 @@ object Streaming {
     * temperature-controlled quality draw" for a continuously-fed corpus.
     */
   class GumbelTopKMonitor(idCol: String, scoreCol: String, k: Int,
-                          invTemp: Double = 1.0, salt: String = "gumbel") {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var top: Option[DataFrame] = None
+                          invTemp: Double = 1.0, salt: String = "gumbel")
+      extends Monitor {
+    private val top = state("top",
+      _.orderBy(col("gumbel_key").desc, col(idCol).asc).limit(k))
 
     /** fold one micro-batch of (idCol, scoreCol) rows into the top-k */
-    def update(batch: DataFrame): Unit = {
-      val cand = graft.functions.Sampling.gumbelTopK(
-        batch, idCol, col(scoreCol), k, invTemp, salt)
-      top = Some(bridge.freeze(top match {
-        case None => cand
-        case Some(t) => t.unionByName(cand)
-          .orderBy(col("gumbel_key").desc, col(idCol).asc).limit(k)
-      }))
-    }
+    def update(batch: DataFrame): Unit =
+      top.add(graft.functions.Sampling.gumbelTopK(
+        batch, idCol, col(scoreCol), k, invTemp, salt))
 
     /** current selection — equals the batch gumbelTopK over all rows seen */
-    def selected: DataFrame = top.getOrElse(
-      throw new IllegalStateException("no batches ingested"))
-
-    /** persist the selection for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("top" -> top))
-
-    /** restore selection from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      top = MonitorState.load(spark, dir, "top")
+    def selected: DataFrame = top.merged
   }
 
   /** Streaming correlation monitor — the JOINT-distribution drift watch:
@@ -1025,42 +979,24 @@ object Streaming {
     * every marginal monitor stayed quiet. Wire with
     * [[foreachBatchMerge]]`(stream, cm.update)`.
     */
-  class CorrMonitor(cols: Seq[String]) {
+  class CorrMonitor(cols: Seq[String]) extends Monitor {
     require(cols.size >= 2, "need at least two columns")
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var moments: Option[DataFrame] = None
+    private val moments = state("moments", DeltaState.sumAll)
 
     /** fold one micro-batch's moments into the 1-row state */
-    def update(batch: DataFrame): Unit = {
-      val bm = graft.functions.Stats.corrMoments(batch, cols)
-      moments = Some(bridge.freeze(moments match {
-        case None => bm
-        case Some(m) =>
-          val summed = m.columns.map(c =>
-            if (c == "__n") sum(col(c)).as(c) else sum(col(c)).as(c))
-          m.unionByName(bm).agg(summed.head, summed.tail: _*)
-      }))
-    }
+    def update(batch: DataFrame): Unit =
+      moments.add(graft.functions.Stats.corrMoments(batch, cols))
 
     /** current correlation matrix — equals the batch one */
     def matrix: DataFrame = graft.functions.Stats.corrOfMoments(
-      moments.getOrElse(throw new IllegalStateException("no batches ingested")), cols)
+      moments.merged, cols)
 
     /** current CUPED θ / variance-reduction readout for covariate `x`
       * against metric `y` — the second readout off the SAME 1-row moment
       * state; equals the batch [[graft.functions.Stats.cuped]]
       */
     def cuped(x: String, y: String): DataFrame =
-      graft.functions.Stats.cupedOfMoments(
-        moments.getOrElse(throw new IllegalStateException("no batches ingested")),
-        cols, x, y)
-
-    /** persist the moment state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("moments" -> moments))
-
-    /** restore moment state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      moments = MonitorState.load(spark, dir, "moments")
+      graft.functions.Stats.cupedOfMoments(moments.merged, cols, x, y)
   }
 
   /** Streaming Welch t-test monitor — the LIVE A/B experiment readout:
@@ -1074,42 +1010,25 @@ object Streaming {
     * yet" answered continuously with constant state. Wire with
     * [[foreachBatchMerge]]`(stream, wm.update)`.
     */
-  class WelchMonitor(control: DataFrame, valueCol: String) {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private val refMoments = bridge.freeze(
+  class WelchMonitor(control: DataFrame, valueCol: String) extends Monitor {
+    private val refMoments = Bridge.freeze(
       graft.functions.Stats.welchMoments(control, valueCol, "a"))
-    private var moments: Option[DataFrame] = None
+    private val moments = state("moments", DeltaState.sumAll)
 
     /** fold one treatment micro-batch's (n, Σx, Σx²) into the 1-row state */
-    def update(batch: DataFrame): Unit = {
-      val bm = graft.functions.Stats.welchMoments(batch, valueCol, "b")
-      moments = Some(bridge.freeze(moments match {
-        case None => bm
-        case Some(m) =>
-          val summed = m.columns.map(c => sum(col(c)).as(c))
-          m.unionByName(bm).agg(summed.head, summed.tail: _*)
-      }))
-    }
+    def update(batch: DataFrame): Unit =
+      moments.add(graft.functions.Stats.welchMoments(batch, valueCol, "b"))
 
     /** current (n_a, n_b, mean_a, mean_b, t, df) — equals the batch test */
     def readout: DataFrame = graft.functions.Stats.welchOfMoments(
-      refMoments.crossJoin(moments.getOrElse(
-        throw new IllegalStateException("no batches ingested"))))
+      refMoments.crossJoin(moments.merged))
 
     /** second readout off the SAME moment state: Cohen's d / Hedges' g
       * ([[graft.functions.Stats.cohensDOfMoments]]) — equals the batch
       * [[graft.functions.Stats.cohensD]] over everything seen
       */
     def effectSize: DataFrame = graft.functions.Stats.cohensDOfMoments(
-      refMoments.crossJoin(moments.getOrElse(
-        throw new IllegalStateException("no batches ingested"))))
-
-    /** persist the moment state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("moments" -> moments))
-
-    /** restore moment state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      moments = MonitorState.load(spark, dir, "moments")
+      refMoments.crossJoin(moments.merged))
   }
 
   /** Streaming OLS trend monitor — "is the metric trending, live": every
@@ -1121,31 +1040,15 @@ object Streaming {
     * PSI says the distribution moved, this says which way and how fast
     * per unit of x. Wire with [[foreachBatchMerge]]`(stream, tm.update)`.
     */
-  class TrendMonitor(xCol: Column, yCol: Column) {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var moments: Option[DataFrame] = None
+  class TrendMonitor(xCol: Column, yCol: Column) extends Monitor {
+    private val moments = state("moments", DeltaState.sumAll)
 
     /** fold one micro-batch's regression moments into the 1-row state */
-    def update(batch: DataFrame): Unit = {
-      val bm = graft.functions.Stats.trendMoments(batch, xCol, yCol)
-      moments = Some(bridge.freeze(moments match {
-        case None => bm
-        case Some(m) =>
-          val summed = m.columns.map(c => sum(col(c)).as(c))
-          m.unionByName(bm).agg(summed.head, summed.tail: _*)
-      }))
-    }
+    def update(batch: DataFrame): Unit =
+      moments.add(graft.functions.Stats.trendMoments(batch, xCol, yCol))
 
     /** current (n, slope, intercept, r2, t) — equals the batch trendTest */
-    def readout: DataFrame = graft.functions.Stats.trendOfMoments(
-      moments.getOrElse(throw new IllegalStateException("no batches ingested")))
-
-    /** persist the moment state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("moments" -> moments))
-
-    /** restore moment state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      moments = MonitorState.load(spark, dir, "moments")
+    def readout: DataFrame = graft.functions.Stats.trendOfMoments(moments.merged)
   }
 
   /** Streaming one-way ANOVA monitor — "are the cohorts' means still
@@ -1157,32 +1060,22 @@ object Streaming {
     * to the batch [[graft.functions.Stats.anovaF]] over everything seen.
     * Wire with [[foreachBatchMerge]]`(stream, am.update)`.
     */
-  class AnovaMonitor(groupCol: Column, valueCol: Column) {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var moments: Option[DataFrame] = None
+  class AnovaMonitor(groupCol: Column, valueCol: Column) extends Monitor {
+    private val moments = state("moments", DeltaState.sumBy("__g")("__gn", "__gs", "__gq"))
 
     /** fold one micro-batch's per-group moments into the k-row state */
-    def update(batch: DataFrame): Unit = {
-      val bm = graft.functions.Stats.groupMoments(batch, groupCol, valueCol)
-      moments = Some(bridge.freeze(moments match {
-        case None => bm
-        case Some(m) => m.unionByName(bm).groupBy(col("__g"))
-          .agg(sum(col("__gn")).as("__gn"), sum(col("__gs")).as("__gs"),
-            sum(col("__gq")).as("__gq"))
-      }))
-    }
+    def update(batch: DataFrame): Unit =
+      moments.add(graft.functions.Stats.groupMoments(batch, groupCol, valueCol))
 
     /** current (k, n, df1, df2, f, eta2) — equals the batch anovaF */
-    def readout: DataFrame = graft.functions.Stats.anovaOfGroupMoments(
-      moments.getOrElse(throw new IllegalStateException("no batches ingested")))
+    def readout: DataFrame = graft.functions.Stats.anovaOfGroupMoments(moments.merged)
 
     /** second readout off the SAME group-moment state: the Tukey HSD
       * pairwise table ([[graft.functions.Stats.tukeyOfGroupMoments]]) —
       * equals the batch [[graft.functions.Stats.tukeyHsd]] over
       * everything seen
       */
-    def pairwise: DataFrame = graft.functions.Stats.tukeyOfGroupMoments(
-      moments.getOrElse(throw new IllegalStateException("no batches ingested")))
+    def pairwise: DataFrame = graft.functions.Stats.tukeyOfGroupMoments(moments.merged)
 
     /** third readout off the SAME group-moment state: Bartlett's
       * variance-homogeneity test
@@ -1192,15 +1085,7 @@ object Streaming {
       * [[graft.functions.Stats.bartlettTest]] over everything seen
       */
     def varianceHomogeneity: DataFrame =
-      graft.functions.Stats.bartlettOfGroupMoments(
-        moments.getOrElse(throw new IllegalStateException("no batches ingested")))
-
-    /** persist the moment state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("moments" -> moments))
-
-    /** restore moment state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      moments = MonitorState.load(spark, dir, "moments")
+      graft.functions.Stats.bartlettOfGroupMoments(moments.merged)
   }
 
   /** Streaming Kruskal–Wallis monitor — "do the cohorts still draw from
@@ -1213,12 +1098,11 @@ object Streaming {
     * the nonparametric sibling of [[AnovaMonitor]] on the same stream.
     * Wire with [[foreachBatchMerge]]`(stream, km.update)`.
     */
-  class KruskalMonitor(groupCol: Column, valueCol: Column) {
+  class KruskalMonitor(groupCol: Column, valueCol: Column) extends Monitor {
     // the (value, group) key table can approach row cardinality
     // (continuous values): LSM delta state keeps per-batch work
     // batch-proportional instead of re-aggregating the accreted table
-    private val counts = new DeltaState(
-      _.groupBy(col("__v"), col("__g")).agg(sum(col("__c")).as("__c")))
+    private val counts = state("counts", DeltaState.sumBy("__v", "__g")("__c"), maxDeltas = 8)
 
     /** fold one micro-batch's (value, group) counts into the keyed state */
     def update(batch: DataFrame): Unit =
@@ -1286,14 +1170,6 @@ object Streaming {
       * equals the batch [[graft.functions.Stats.moodMedianTest]]
       */
     def medianTest: DataFrame = graft.functions.Stats.moodOfCounts(counts.merged)
-
-    /** persist the count state for crash-restart (call after update) */
-    def saveState(dir: String): Unit =
-      MonitorState.save(dir, Map("counts" -> counts.forSave))
-
-    /** restore count state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      counts.reset(MonitorState.load(spark, dir, "counts"))
   }
 
   /** Streaming normality monitor — "is this metric still bell-shaped,
@@ -1307,51 +1183,36 @@ object Streaming {
     * ([[extremes]]). The assumption-check layer under every z/t alarm
     * upstream. Wire with [[foreachBatchMerge]]`(stream, nm.update)`.
     */
-  class NormalityMonitor(valueCol: Column) {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var moments: Option[DataFrame] = None
+  class NormalityMonitor(valueCol: Column) extends Monitor {
+    private val moments = state("moments", m => {
+      val merged = m.columns.map {
+        case c @ "__jlo" => min(col(c)).as(c)
+        case c @ "__jhi" => max(col(c)).as(c)
+        case c           => sum(col(c)).as(c)
+      }
+      m.agg(merged.head, merged.tail: _*)
+    })
 
     /** fold one micro-batch's power-sum row into the 1-row state */
-    def update(batch: DataFrame): Unit = {
-      val bm = graft.functions.Stats.normalityMoments(batch, valueCol)
-      moments = Some(bridge.freeze(moments match {
-        case None => bm
-        case Some(m) =>
-          val merged = m.columns.map {
-            case c @ "__jlo" => min(col(c)).as(c)
-            case c @ "__jhi" => max(col(c)).as(c)
-            case c           => sum(col(c)).as(c)
-          }
-          m.unionByName(bm).agg(merged.head, merged.tail: _*)
-      }))
-    }
-
-    private def state: DataFrame = moments.getOrElse(
-      throw new IllegalStateException("no batches ingested"))
+    def update(batch: DataFrame): Unit =
+      moments.add(graft.functions.Stats.normalityMoments(batch, valueCol))
 
     /** current (n, mean, sd, skewness, kurtosis, jb, p) — equals the
       * batch [[graft.functions.Stats.jarqueBera]]
       */
-    def readout: DataFrame = graft.functions.Stats.jbOfMoments(state)
+    def readout: DataFrame = graft.functions.Stats.jbOfMoments(moments.merged)
 
     /** second readout off the SAME moment state: Grubbs' extreme-outlier
       * statistic ([[graft.functions.Stats.grubbsOfMoments]]) — equals
       * the batch [[graft.functions.Stats.grubbsTest]]
       */
-    def extremes: DataFrame = graft.functions.Stats.grubbsOfMoments(state)
+    def extremes: DataFrame = graft.functions.Stats.grubbsOfMoments(moments.merged)
 
     /** third readout off the SAME moment state: D'Agostino's K² omnibus
       * normality test ([[graft.functions.Stats.k2OfMoments]]) — equals
       * the batch [[graft.functions.Stats.dagostinoK2]]
       */
-    def omnibus: DataFrame = graft.functions.Stats.k2OfMoments(state)
-
-    /** persist the moment state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("moments" -> moments))
-
-    /** restore moment state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      moments = MonitorState.load(spark, dir, "moments")
+    def omnibus: DataFrame = graft.functions.Stats.k2OfMoments(moments.merged)
   }
 
   /** Streaming two-proportion monitor — the live RATE comparison (A/B
@@ -1362,26 +1223,17 @@ object Streaming {
     * route to arm a where `armA` is true, arm b otherwise. Wire with
     * [[foreachBatchMerge]]`(stream, pm.update)`.
     */
-  class ProportionMonitor(armA: Column, successCol: Column) {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var counts: Option[DataFrame] = None
+  class ProportionMonitor(armA: Column, successCol: Column) extends Monitor {
+    private val counts = state("counts", DeltaState.sumAll)
 
     /** fold one micro-batch's per-arm (n, successes) into the 1-row state */
-    def update(batch: DataFrame): Unit = {
-      val bc = graft.functions.Stats.propCounts(batch.filter(armA), successCol, "a")
+    def update(batch: DataFrame): Unit =
+      counts.add(graft.functions.Stats.propCounts(batch.filter(armA), successCol, "a")
         .crossJoin(graft.functions.Stats.propCounts(
-          batch.filter(!armA), successCol, "b"))
-      counts = Some(bridge.freeze(counts match {
-        case None => bc
-        case Some(c) =>
-          val summed = c.columns.map(cn => sum(col(cn)).as(cn))
-          c.unionByName(bc).agg(summed.head, summed.tail: _*)
-      }))
-    }
+          batch.filter(!armA), successCol, "b")))
 
     /** current (n_a, n_b, p_a, p_b, z) — equals the batch twoProportionZ */
-    def readout: DataFrame = graft.functions.Stats.propOfCounts(
-      counts.getOrElse(throw new IllegalStateException("no batches ingested")))
+    def readout: DataFrame = graft.functions.Stats.propOfCounts(counts.merged)
 
     /** Wald SPRT readout on the LIVE arm (arm B) — the peek-proof
       * stopping rule off the SAME additive count state
@@ -1390,9 +1242,7 @@ object Streaming {
       */
     def sequential(p0: Double, p1: Double, alpha: Double = 0.05,
                    beta: Double = 0.2): DataFrame =
-      graft.functions.Stats.sprtOfCounts(
-        counts.getOrElse(throw new IllegalStateException("no batches ingested")),
-        p0, p1, alpha, beta)
+      graft.functions.Stats.sprtOfCounts(counts.merged, p0, p1, alpha, beta)
 
     /** second readout off the SAME count state: the sample-size plan
       * ([[graft.functions.Stats.powerOfCounts]]) — how many rows per arm
@@ -1400,17 +1250,14 @@ object Streaming {
       * difference; equals the batch [[graft.functions.Stats.powerTwoProp]]
       */
     def sampleSize(zSumSq: Double = graft.functions.Stats.zSumSq80At05): DataFrame =
-      graft.functions.Stats.powerOfCounts(
-        counts.getOrElse(throw new IllegalStateException("no batches ingested")),
-        zSumSq)
+      graft.functions.Stats.powerOfCounts(counts.merged, zSumSq)
 
     /** third readout off the SAME count state: Cohen's h effect size
       * ([[graft.functions.Stats.cohenHOfCounts]]) — how LARGE the share
       * move is on the arcsine scale; equals the batch
       * [[graft.functions.Stats.cohenH]]
       */
-    def effectSize: DataFrame = graft.functions.Stats.cohenHOfCounts(
-      counts.getOrElse(throw new IllegalStateException("no batches ingested")))
+    def effectSize: DataFrame = graft.functions.Stats.cohenHOfCounts(counts.merged)
 
     /** fourth readout off the SAME count state: relative risk and odds
       * ratio with 95% log-scale intervals
@@ -1418,15 +1265,7 @@ object Streaming {
       * launch review debates; equals the batch
       * [[graft.functions.Stats.riskRatio]]
       */
-    def ratioEffect: DataFrame = graft.functions.Stats.rrOfCounts(
-      counts.getOrElse(throw new IllegalStateException("no batches ingested")))
-
-    /** persist the count state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("counts" -> counts))
-
-    /** restore count state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      counts = MonitorState.load(spark, dir, "counts")
+    def ratioEffect: DataFrame = graft.functions.Stats.rrOfCounts(counts.merged)
   }
 
   /** Streaming Cochran–Mantel–Haenszel monitor — the live STRATIFIED A/B
@@ -1441,39 +1280,23 @@ object Streaming {
     * stratification, not the data. Wire with
     * [[foreachBatchMerge]]`(stream, mm.update)`.
     */
-  class MhMonitor(stratum: Column, armA: Column, success: Column) {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var counts: Option[DataFrame] = None
+  class MhMonitor(stratum: Column, armA: Column, success: Column) extends Monitor {
+    private val counts = state("counts",
+      DeltaState.sumBy("__st")("__na", "__xa", "__nb", "__xb"))
 
     /** fold one micro-batch's per-stratum 2×2 counts into the state */
-    def update(batch: DataFrame): Unit = {
-      val bc = graft.functions.Stats.stratumPropCounts(batch, stratum, armA, success)
-      counts = Some(bridge.freeze(counts match {
-        case None => bc
-        case Some(c) => c.unionByName(bc).groupBy(col("__st"))
-          .agg(sum(col("__na")).as("__na"), sum(col("__xa")).as("__xa"),
-            sum(col("__nb")).as("__nb"), sum(col("__xb")).as("__xb"))
-      }))
-    }
+    def update(batch: DataFrame): Unit =
+      counts.add(graft.functions.Stats.stratumPropCounts(batch, stratum, armA, success))
 
     /** current (k_strata, n_a, n_b, chi2_mh, or_mh) — equals the batch one */
-    def readout: DataFrame = graft.functions.Stats.mhOfCounts(
-      counts.getOrElse(throw new IllegalStateException("no batches ingested")))
+    def readout: DataFrame = graft.functions.Stats.mhOfCounts(counts.merged)
 
     /** Breslow–Day homogeneity readout off the SAME per-stratum 2×2
       * state ([[graft.functions.Stats.bdOfCounts]]) — does the effect
       * itself differ by stratum, the assumption `readout`'s pooled OR
       * makes; equals the batch [[graft.functions.Stats.breslowDay]]
       */
-    def homogeneity: DataFrame = graft.functions.Stats.bdOfCounts(
-      counts.getOrElse(throw new IllegalStateException("no batches ingested")))
-
-    /** persist the count state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("counts" -> counts))
-
-    /** restore count state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      counts = MonitorState.load(spark, dir, "counts")
+    def homogeneity: DataFrame = graft.functions.Stats.bdOfCounts(counts.merged)
   }
 
   /** Streaming Spearman monitor — live MONOTONE-coupling drift: ranks are
@@ -1486,12 +1309,11 @@ object Streaming {
     * The rank sibling of [[CorrMonitor]] on the same stream. Wire with
     * [[foreachBatchMerge]]`(stream, sm.update)`.
     */
-  class SpearmanMonitor(xCol: Column, yCol: Column) {
+  class SpearmanMonitor(xCol: Column, yCol: Column) extends Monitor {
     // the (x, y) key table can approach ROW cardinality (continuous y):
     // LSM delta state keeps per-batch work batch-proportional instead of
     // re-aggregating the whole accreted pair table every micro-batch
-    private val counts = new DeltaState(
-      _.groupBy(col("__x"), col("__y")).agg(sum(col("__c")).as("__c")))
+    private val counts = state("counts", DeltaState.sumBy("__x", "__y")("__c"), maxDeltas = 8)
 
     /** fold one micro-batch's (x, y) counts into the keyed state */
     def update(batch: DataFrame): Unit =
@@ -1508,14 +1330,6 @@ object Streaming {
       */
     def kendall: DataFrame =
       graft.functions.Stats.kendallOfCounts(counts.merged)
-
-    /** persist the count state for crash-restart (call after update) */
-    def saveState(dir: String): Unit =
-      MonitorState.save(dir, Map("counts" -> counts.forSave))
-
-    /** restore count state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      counts.reset(MonitorState.load(spark, dir, "counts"))
   }
 
   /** Streaming Kaplan–Meier monitor — the live censoring-aware retention
@@ -1528,12 +1342,13 @@ object Streaming {
     * is |users| rows of three columns, independent of event volume. Wire
     * with [[foreachBatchMerge]]`(stream, sm.update)`.
     */
-  class SurvivalMonitor(userCol: String = "user_id", tsCol: String = "ts") {
+  class SurvivalMonitor(userCol: String = "user_id", tsCol: String = "ts")
+      extends Monitor {
     // |users| can be corpus-scale: LSM delta state (min/max spans merge
     // associatively) keeps per-batch work batch-proportional
-    private val spans = new DeltaState(
+    private val spans = state("spans",
       _.groupBy(col("__u")).agg(min(col("__first")).as("__first"),
-        max(col("__last")).as("__last")))
+        max(col("__last")).as("__last")), maxDeltas = 8)
 
     /** fold one micro-batch of raw events into the per-user span state */
     def update(batch: DataFrame): Unit =
@@ -1558,14 +1373,6 @@ object Streaming {
       */
     def summary(censorDays: Int = 7): DataFrame =
       graft.functions.Events.summaryOfSpans(spans.merged, censorDays)
-
-    /** persist the span state for crash-restart (call after update) */
-    def saveState(dir: String): Unit =
-      MonitorState.save(dir, Map("spans" -> spans.forSave))
-
-    /** restore span state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      spans.reset(MonitorState.load(spark, dir, "spans"))
   }
 
   /** Streaming embedding-covariance monitor — the live anisotropy /
@@ -1579,39 +1386,23 @@ object Streaming {
     * is ONE row regardless of history. Wire with
     * [[foreachBatchMerge]]`(stream, cm.update)`.
     */
-  class CovMonitor(vecCol: String, dims: Seq[Int]) {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var moments: Option[DataFrame] = None
+  class CovMonitor(vecCol: String, dims: Seq[Int]) extends Monitor {
+    private val moments = state("moments", DeltaState.sumAll)
 
     /** fold one micro-batch's moments into the 1-row state */
-    def update(batch: DataFrame): Unit = {
-      val bm = graft.functions.Vectors.covMoments(batch, vecCol, dims)
-      moments = Some(bridge.freeze(moments match {
-        case None => bm
-        case Some(m) =>
-          val summed = m.columns.map(c => sum(col(c)).as(c))
-          m.unionByName(bm).agg(summed.head, summed.tail: _*)
-      }))
-    }
+    def update(batch: DataFrame): Unit =
+      moments.add(graft.functions.Vectors.covMoments(batch, vecCol, dims))
 
     /** current covariance submatrix — equals the batch one */
     def matrix: DataFrame = graft.functions.Vectors.covOfMoments(
-      moments.getOrElse(throw new IllegalStateException("no batches ingested")), dims)
+      moments.merged, dims)
 
     /** current Cronbach internal-consistency readout — the second readout
       * off the SAME 1-row moment state; equals the batch
       * [[graft.functions.Vectors.cronbachAlpha]]
       */
-    def consistency: DataFrame = graft.functions.Vectors.cronbachOfMoments(
-      moments.getOrElse(throw new IllegalStateException("no batches ingested")),
-      dims)
-
-    /** persist the moment state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("moments" -> moments))
-
-    /** restore moment state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      moments = MonitorState.load(spark, dir, "moments")
+    def consistency: DataFrame =
+      graft.functions.Vectors.cronbachOfMoments(moments.merged, dims)
   }
 
   /** Streaming mixture monitor — live τ-sampling rates over an arriving
@@ -1625,33 +1416,18 @@ object Streaming {
     * reads the latest table. State is bounded by |groups|, never by rows.
     * Wire with [[foreachBatchMerge]]`(stream, mm.update)`.
     */
-  class MixtureMonitor(groupCol: String, tokenCount: Column) {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var masses: Option[DataFrame] = None
+  class MixtureMonitor(groupCol: String, tokenCount: Column) extends Monitor {
+    private val masses = state("masses", DeltaState.sumBy(groupCol)("__gt"))
 
     /** fold one micro-batch's per-group token masses into the keyed state */
-    def update(batch: DataFrame): Unit = {
-      val bm = batch.withColumn("__nt", tokenCount.cast("long"))
-        .groupBy(col(groupCol)).agg(sum(col("__nt")).as("__gt"))
-      masses = Some(bridge.freeze(masses match {
-        case None => bm
-        case Some(m) => m.unionByName(bm)
-          .groupBy(col(groupCol)).agg(sum(col("__gt")).as("__gt"))
-      }))
-    }
+    def update(batch: DataFrame): Unit =
+      masses.add(batch.withColumn("__nt", tokenCount.cast("long"))
+        .groupBy(col(groupCol)).agg(sum(col("__nt")).as("__gt")))
 
     /** current (group, mass, share_bp, rate_bp) — equals the batch rates */
     def rates(alpha: Double, budgetFrac: Double, buckets: Int = 10000): DataFrame =
       graft.functions.Sampling.temperatureRates(
-        masses.getOrElse(throw new IllegalStateException("no batches ingested")),
-        groupCol, alpha, budgetFrac, buckets)
-
-    /** persist the mass state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("masses" -> masses))
-
-    /** restore mass state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      masses = MonitorState.load(spark, dir, "masses")
+        masses.merged, groupCol, alpha, budgetFrac, buckets)
   }
 
   /** Streaming mutual-information monitor — live dependence drift between
@@ -1665,46 +1441,29 @@ object Streaming {
     * quality). State is bounded by |X|·|Y|, never by rows. Wire with
     * [[foreachBatchMerge]]`(stream, mm.update)`.
     */
-  class MiMonitor(xCol: String, yCol: String) {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var joint: Option[DataFrame] = None
+  class MiMonitor(xCol: String, yCol: String) extends Monitor {
+    private val joint = state("joint", DeltaState.sumBy("__x", "__y")("__cxy"))
 
     /** fold one micro-batch's joint counts into the keyed state */
-    def update(batch: DataFrame): Unit = {
-      val bj = graft.functions.Stats.jointCounts(batch, xCol, yCol)
-      joint = Some(bridge.freeze(joint match {
-        case None => bj
-        case Some(j) => j.unionByName(bj)
-          .groupBy(col("__x"), col("__y")).agg(sum(col("__cxy")).as("__cxy"))
-      }))
-    }
+    def update(batch: DataFrame): Unit =
+      joint.add(graft.functions.Stats.jointCounts(batch, xCol, yCol))
 
     /** current (n, n_x, n_y, h_x, h_y, mi, nmi) row — equals the batch one */
-    def readout: DataFrame = graft.functions.Stats.miOfJoint(
-      joint.getOrElse(throw new IllegalStateException("no batches ingested")))
+    def readout: DataFrame = graft.functions.Stats.miOfJoint(joint.merged)
 
     /** current Cramér's V (n, r, c, chi2, v) — equals the batch
       * [[graft.functions.Stats.cramersV]]; the second readout of the same
       * joint-count state (MI asks "how much does knowing x tell me about
       * y", V asks "how strong is the coupling on a [0,1] scale")
       */
-    def association: DataFrame = graft.functions.Stats.cramersVOfJoint(
-      joint.getOrElse(throw new IllegalStateException("no batches ingested")))
+    def association: DataFrame = graft.functions.Stats.cramersVOfJoint(joint.merged)
 
     /** third readout off the SAME joint-count state: Theil's directional
       * uncertainty coefficients
       * ([[graft.functions.Stats.uncertaintyOfJoint]]) — equals the batch
       * [[graft.functions.Stats.theilU]] over everything seen
       */
-    def uncertainty: DataFrame = graft.functions.Stats.uncertaintyOfJoint(
-      joint.getOrElse(throw new IllegalStateException("no batches ingested")))
-
-    /** persist the joint-count state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("joint" -> joint))
-
-    /** restore joint-count state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      joint = MonitorState.load(spark, dir, "joint")
+    def uncertainty: DataFrame = graft.functions.Stats.uncertaintyOfJoint(joint.merged)
   }
 
   /** Streaming Poisson-bootstrap monitor — live confidence intervals over
@@ -1720,16 +1479,13 @@ object Streaming {
     * [[foreachBatchMerge]]`(stream, bm.update)`.
     */
   class BootstrapMonitor(idCol: String, valueCol: String,
-                         replicates: Int = 16, salt: String = "boot") {
+                         replicates: Int = 16, salt: String = "boot")
+      extends Monitor {
     // 1-row additive moment state: column-wise decimal sums fold any
     // grouping of batches to the same exact values, so the per-batch
-    // moment rows ride DeltaState (round 17) — each batch's fold job
-    // overlaps the next batch's plan instead of chaining one
-    // union-agg-freeze per update on the driver
-    private val moments = new DeltaState(d => {
-      val summed = d.columns.map(c => sum(col(c)).as(c))
-      d.agg(summed.head, summed.tail: _*)
-    })
+    // moment rows ride the LSM shape (round 17) — a bounded replay freezes
+    // each batch's row independently and folds them once at readout
+    private val moments = state("moments", DeltaState.sumAll, maxDeltas = 8)
 
     /** fold one micro-batch's replicate moments into the 1-row state */
     def update(batch: DataFrame): Unit =
@@ -1739,14 +1495,6 @@ object Streaming {
     /** current (rep, n_eff, boot_sum) table — equals the batch one */
     def readout: DataFrame = graft.functions.Stats.bootOfMoments(
       moments.merged, replicates)
-
-    /** persist the moment state for crash-restart (call after update) */
-    def saveState(dir: String): Unit =
-      MonitorState.save(dir, Map("moments" -> moments.forSave))
-
-    /** restore moment state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      moments.reset(MonitorState.load(spark, dir, "moments"))
   }
 
   /** Streaming ROC-AUC monitor — live ranking quality of a filter score as
@@ -1760,12 +1508,10 @@ object Streaming {
     * missed. State is bounded by distinct scores, never by rows. Wire with
     * [[foreachBatchMerge]]`(stream, am.update)`.
     */
-  class AucMonitor(score: Column, label: Column) {
+  class AucMonitor(score: Column, label: Column) extends Monitor {
     // the per-score key table approaches row cardinality for continuous
     // scores: LSM delta state keeps per-batch work batch-proportional
-    private val counts = new DeltaState(
-      _.groupBy(col("__s"))
-        .agg(sum(col("__p")).as("__p"), sum(col("__n")).as("__n")))
+    private val counts = state("counts", DeltaState.sumBy("__s")("__p", "__n"), maxDeltas = 8)
 
     /** fold one micro-batch's per-score counts into the keyed state */
     def update(batch: DataFrame): Unit =
@@ -1865,14 +1611,6 @@ object Streaming {
       */
     def transportDistance(width: Double): DataFrame =
       graft.functions.Stats.w1OfCounts(counts.merged, width)
-
-    /** persist the count state for crash-restart (call after update) */
-    def saveState(dir: String): Unit =
-      MonitorState.save(dir, Map("counts" -> counts.forSave))
-
-    /** restore count state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      counts.reset(MonitorState.load(spark, dir, "counts"))
   }
 
   /** Streaming filter-agreement monitor — live Cohen's kappa between two
@@ -1886,32 +1624,22 @@ object Streaming {
     * State is ONE row forever. Wire with
     * [[foreachBatchMerge]]`(stream, km.update)`.
     */
-  class KappaMonitor(flagA: Column, flagB: Column) {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var counts: Option[DataFrame] = None
+  class KappaMonitor(flagA: Column, flagB: Column) extends Monitor {
+    private val counts = state("counts", DeltaState.sumAll)
 
     /** fold one micro-batch's confusion counts into the 1-row state */
-    def update(batch: DataFrame): Unit = {
-      val bc = graft.functions.Curation.confusionCounts(batch, flagA, flagB)
-      counts = Some(bridge.freeze(counts match {
-        case None => bc
-        case Some(c) =>
-          val summed = c.columns.map(x => sum(col(x)).as(x))
-          c.unionByName(bc).agg(summed.head, summed.tail: _*)
-      }))
-    }
+    def update(batch: DataFrame): Unit =
+      counts.add(graft.functions.Curation.confusionCounts(batch, flagA, flagB))
 
     /** current (n, …, po, pe, kappa) row — equals the batch one */
-    def readout: DataFrame = graft.functions.Curation.kappaOfCounts(
-      counts.getOrElse(throw new IllegalStateException("no batches ingested")))
+    def readout: DataFrame = graft.functions.Curation.kappaOfCounts(counts.merged)
 
     /** second readout off the SAME confusion state: McNemar's
       * disagreement-asymmetry test
       * ([[graft.functions.Curation.mcnemarOfCounts]]) — equals the batch
       * [[graft.functions.Curation.mcnemar]] over everything seen
       */
-    def disagreement: DataFrame = graft.functions.Curation.mcnemarOfCounts(
-      counts.getOrElse(throw new IllegalStateException("no batches ingested")))
+    def disagreement: DataFrame = graft.functions.Curation.mcnemarOfCounts(counts.merged)
 
     /** third readout off the SAME confusion state: Scott's π and Gwet's
       * AC1 ([[graft.functions.Curation.gwetOfCounts]]) — the
@@ -1919,15 +1647,8 @@ object Streaming {
       * kappa's paradox bites; equals the batch
       * [[graft.functions.Curation.chanceRobustAgreement]]
       */
-    def chanceRobustAgreement: DataFrame = graft.functions.Curation.gwetOfCounts(
-      counts.getOrElse(throw new IllegalStateException("no batches ingested")))
-
-    /** persist the confusion state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("counts" -> counts))
-
-    /** restore confusion state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      counts = MonitorState.load(spark, dir, "counts")
+    def chanceRobustAgreement: DataFrame =
+      graft.functions.Curation.gwetOfCounts(counts.merged)
   }
 
   /** Streaming Cochran's Q monitor — the k-filter rate-agreement panel,
@@ -1938,33 +1659,23 @@ object Streaming {
     * over everything seen — the k-way sibling of [[KappaMonitor]] on the
     * same stream. Wire with [[foreachBatchMerge]]`(stream, cm.update)`.
     */
-  class CochranMonitor(flags: Seq[Column]) {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var counts: Option[DataFrame] = None
+  class CochranMonitor(flags: Seq[Column]) extends Monitor {
+    private val counts = state("counts", DeltaState.sumAll)
 
     /** fold one micro-batch's panel counts into the 1-row state */
-    def update(batch: DataFrame): Unit = {
-      val bc = graft.functions.Curation.cochranCounts(batch, flags)
-      counts = Some(bridge.freeze(counts match {
-        case None => bc
-        case Some(c) =>
-          val summed = c.columns.map(x => sum(col(x)).as(x))
-          c.unionByName(bc).agg(summed.head, summed.tail: _*)
-      }))
-    }
+    def update(batch: DataFrame): Unit =
+      counts.add(graft.functions.Curation.cochranCounts(batch, flags))
 
     /** current (k, n, df, q) row — equals the batch cochranQ */
-    def readout: DataFrame = graft.functions.Curation.cochranOfCounts(
-      counts.getOrElse(throw new IllegalStateException("no batches ingested")),
-      flags.size)
+    def readout: DataFrame =
+      graft.functions.Curation.cochranOfCounts(counts.merged, flags.size)
 
     /** second readout off the SAME panel state: Fleiss' kappa agreement
       * ([[graft.functions.Curation.fleissOfCounts]]) — equals the batch
       * [[graft.functions.Curation.fleissKappa]] over everything seen
       */
     def agreement: DataFrame = graft.functions.Curation.fleissOfCounts(
-      counts.getOrElse(throw new IllegalStateException("no batches ingested")),
-      flags.size)
+      counts.merged, flags.size)
 
     /** third readout off the SAME panel state: Krippendorff's alpha
       * ([[graft.functions.Curation.alphaOfCounts]]) — the
@@ -1972,15 +1683,7 @@ object Streaming {
       * the batch [[graft.functions.Curation.krippendorffAlpha]]
       */
     def alphaReliability: DataFrame = graft.functions.Curation.alphaOfCounts(
-      counts.getOrElse(throw new IllegalStateException("no batches ingested")),
-      flags.size)
-
-    /** persist the panel state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("counts" -> counts))
-
-    /** restore panel state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      counts = MonitorState.load(spark, dir, "counts")
+      counts.merged, flags.size)
   }
 
   /** Streaming record-linkage monitor — continuous entity resolution at
@@ -2000,30 +1703,19 @@ object Streaming {
                        rightId: String, rightName: String,
                        blockCols: Seq[(String, String)],
                        prefixLen: Int = 3, minSim: Double = 0.8,
-                       maxBlock: Int = 10000) {
+                       maxBlock: Int = 10000) extends Monitor {
     import graft.functions.Linkage
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private val dimIdx = bridge.freeze(Linkage.linkIndex(
+    private val dimIdx = Bridge.freeze(Linkage.linkIndex(
       dim, leftId, leftName, blockCols.map(_._1), prefixLen, maxBlock))
-    private var links: Option[DataFrame] = None
+    private val links = state("links")
 
     /** link one micro-batch of incoming records against the dimension */
-    def update(batch: DataFrame): Unit = {
-      val m = Linkage.linkAgainstIndex(dimIdx, batch, leftId, rightId,
-        rightName, blockCols.map(_._2), prefixLen, minSim, maxBlock)
-      links = Some(bridge.freeze(links.map(_.unionByName(m)).getOrElse(m)))
-    }
+    def update(batch: DataFrame): Unit =
+      links.add(Linkage.linkAgainstIndex(dimIdx, batch, leftId, rightId,
+        rightName, blockCols.map(_._2), prefixLen, minSim, maxBlock))
 
     /** all (leftId, rightId, name_sim) candidates so far */
-    def matches: DataFrame = links.getOrElse(
-      throw new IllegalStateException("no batches ingested"))
-
-    /** persist the link state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("links" -> links))
-
-    /** restore link state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      links = MonitorState.load(spark, dir, "links")
+    def matches: DataFrame = links.merged
   }
 
   /** Stream-static enrichment monitor — the continuous form of the fact
@@ -2038,41 +1730,26 @@ object Streaming {
     * and save/restore). Wire with [[foreachBatchMerge]]`(stream, em.update)`.
     */
   class EnrichMonitor(dim: DataFrame, dimKey: String, segCol: String,
-                      batchKey: String, valueCol: String) {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
+                      batchKey: String, valueCol: String) extends Monitor {
     private val dec = org.apache.spark.sql.types.DecimalType(38, 4)
-    private val dimF = bridge.freeze(
+    private val dimF = Bridge.freeze(
       dim.select(col(dimKey), col(segCol)).dropDuplicates(dimKey))
-    private var totals: Option[DataFrame] = None
+    private val totals = state("totals", _.groupBy(col("segment"))
+      .agg(sum(col("n")).as("n"), sum(col("__v")).cast(dec).as("__v")))
 
     /** enrich one micro-batch and fold its per-segment aggregates in */
-    def update(batch: DataFrame): Unit = {
-      val b = batch
+    def update(batch: DataFrame): Unit =
+      totals.add(batch
         .join(broadcast(dimF), batch(batchKey) === dimF(dimKey))
         .groupBy(col(segCol).as("segment"))
         .agg(count(lit(1)).as("n"),
           sum(col(valueCol).cast(org.apache.spark.sql.types.DecimalType(18, 4)))
-            .cast(dec).as("__v"))
-      val merged = totals match {
-        case None => b
-        case Some(t) => t.unionByName(b).groupBy(col("segment"))
-          .agg(sum(col("n")).as("n"), sum(col("__v")).cast(dec).as("__v"))
-      }
-      totals = Some(bridge.freeze(merged))
-    }
+            .cast(dec).as("__v")))
 
     /** per-segment (segment, n, value_sum) totals over all batches seen */
-    def result: DataFrame = totals.getOrElse(
-      throw new IllegalStateException("no batches ingested"))
+    def result: DataFrame = totals.merged
       .select(col("segment"), col("n"),
         round(col("__v"), 2).cast("double").as("value_sum"))
-
-    /** persist the totals state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("totals" -> totals))
-
-    /** restore totals state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      totals = MonitorState.load(spark, dir, "totals")
   }
 
   /** Streaming Count-Min monitor — continuous approximate frequency
@@ -2086,35 +1763,19 @@ object Streaming {
     * plus a sketch-sized merge; the corpus is never rescanned. Wire with
     * [[foreachBatchMerge]]`(stream, cm.update)`.
     */
-  class CmsMonitor(keyCol: String, depth: Int = 4, width: Int = 512) {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var cells: Option[DataFrame] = None
+  class CmsMonitor(keyCol: String, depth: Int = 4, width: Int = 512) extends Monitor {
+    private val cells = state("cells", DeltaState.sumBy("row", "pos")("cnt"))
 
     /** fold one micro-batch's occurrence stream into the sketch */
-    def update(batch: DataFrame): Unit = {
-      val b = graft.functions.Stats.countMinSketch(batch, keyCol, depth, width)
-      val merged = cells match {
-        case None => b
-        case Some(c) => c.unionByName(b)
-          .groupBy(col("row"), col("pos")).agg(sum(col("cnt")).as("cnt"))
-      }
-      cells = Some(bridge.freeze(merged))
-    }
+    def update(batch: DataFrame): Unit =
+      cells.add(graft.functions.Stats.countMinSketch(batch, keyCol, depth, width))
 
     /** the accreted (row, pos, cnt) sketch over all batches seen */
-    def sketch: DataFrame = cells.getOrElse(
-      throw new IllegalStateException("no batches ingested"))
+    def sketch: DataFrame = cells.merged
 
     /** point-query keys against the accreted sketch (est ≥ true) */
     def estimate(keys: DataFrame, kc: String): DataFrame =
       graft.functions.Stats.countMinEstimate(sketch, keys, kc, depth, width)
-
-    /** persist the sketch state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("cells" -> cells))
-
-    /** restore sketch state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      cells = MonitorState.load(spark, dir, "cells")
   }
 
   /** Streaming quantile monitor — maintain
@@ -2129,34 +1790,18 @@ object Streaming {
     * micro-batch without ever re-scanning the corpus). Wire with
     * [[foreachBatchMerge]]`(stream, qm.update)`.
     */
-  class QuantileMonitor(valueCol: String, width: Double) {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var bins: Option[DataFrame] = None
+  class QuantileMonitor(valueCol: String, width: Double) extends Monitor {
+    private val bins = state("bins", DeltaState.sumBy("bin")("cnt"))
 
     /** fold one micro-batch's fixed-width histogram into the bin state */
-    def update(batch: DataFrame): Unit = {
-      val bb = batch
+    def update(batch: DataFrame): Unit =
+      bins.add(batch
         .select(floor(col(valueCol) / width).cast("long").as("bin"))
-        .groupBy(col("bin")).agg(count(lit(1)).as("cnt"))
-      bins = Some(bridge.freeze(bins match {
-        case None => bb
-        case Some(h) => h.unionByName(bb)
-          .groupBy(col("bin")).agg(sum(col("cnt")).as("cnt"))
-      }))
-    }
+        .groupBy(col("bin")).agg(count(lit(1)).as("cnt")))
 
     /** current (q, bin, lo, hi, cum_count, total) threshold picks */
     def quantiles(qs: Seq[Double]): DataFrame =
-      graft.functions.Stats.quantilesOfBins(
-        bins.getOrElse(throw new IllegalStateException("no batches ingested")),
-        width, qs)
-
-    /** persist the bin state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("bins" -> bins))
-
-    /** restore bin state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      bins = MonitorState.load(spark, dir, "bins")
+      graft.functions.Stats.quantilesOfBins(bins.merged, width, qs)
   }
 
   /** Streaming next-event transition monitor — maintain the
@@ -2180,52 +1825,32 @@ object Streaming {
     */
   class TransitionMonitor(userCol: String = "user_id",
                           typeCol: String = "event_type",
-                          tsCol: String = "ts", idCol: String = "event_id") {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var hops: Option[DataFrame] = None
-    private var lastEvent: Option[DataFrame] = None
+                          tsCol: String = "ts", idCol: String = "event_id")
+      extends Monitor {
+    private val hops = state("hops", DeltaState.sumBy("from_type", "to_type")("n"))
+    private val lastEvent = state("last")
 
     /** fold one micro-batch of raw events into hop-count + last-event state */
     def update(batch: DataFrame): Unit = {
       val b = batch.select(col(userCol).as("__u"), col(tsCol).as("__ts"),
         col(idCol).as("__id"), col(typeCol).as("__ty"))
-      val events = lastEvent match {
-        case None => b
-        case Some(le) => le.unionByName(b)
-      }
+      val events = if (lastEvent.isEmpty) b else lastEvent.merged.unionByName(b)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("__u")).orderBy(col("__ts"), col("__id"))
-      val frozen = bridge.freeze(events
+      val frozen = Bridge.freeze(events
         .withColumn("__next", lead(col("__ty"), 1).over(w))
         .withColumn("__last",
           row_number().over(org.apache.spark.sql.expressions.Window
             .partitionBy(col("__u")).orderBy(col("__ts").desc, col("__id").desc))))
-      val newHops = frozen.filter(col("__next").isNotNull)
+      hops.add(frozen.filter(col("__next").isNotNull)
         .groupBy(col("__ty").as("from_type"), col("__next").as("to_type"))
-        .agg(count(lit(1)).as("n"))
-      hops = Some(bridge.freeze(hops match {
-        case None => newHops
-        case Some(h) => h.unionByName(newHops)
-          .groupBy(col("from_type"), col("to_type"))
-          .agg(sum(col("n")).as("n"))
-      }))
-      lastEvent = Some(bridge.freeze(frozen.filter(col("__last") === 1)
-        .select(col("__u"), col("__ts"), col("__id"), col("__ty"))))
+        .agg(count(lit(1)).as("n")))
+      lastEvent.replace(frozen.filter(col("__last") === 1)
+        .select(col("__u"), col("__ts"), col("__id"), col("__ty")))
     }
 
     /** current (from_type, to_type, n, p) transition matrix */
-    def matrix: DataFrame = graft.functions.Events.transitionsOfCounts(
-      hops.getOrElse(throw new IllegalStateException("no batches ingested")))
-
-    /** persist hop + last-event state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir,
-      Map("hops" -> hops, "last" -> lastEvent))
-
-    /** restore both state tables from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit = {
-      hops = MonitorState.load(spark, dir, "hops")
-      lastEvent = MonitorState.load(spark, dir, "last")
-    }
+    def matrix: DataFrame = graft.functions.Events.transitionsOfCounts(hops.merged)
   }
 
   /** Streaming inter-arrival monitor — accrete the
@@ -2243,60 +1868,41 @@ object Streaming {
   class InterarrivalMonitor(userCol: String = "user_id",
                             typeCol: String = "event_type",
                             tsCol: String = "ts", idCol: String = "event_id",
-                            widthSeconds: Long = 600L, capBuckets: Int = 144) {
+                            widthSeconds: Long = 600L, capBuckets: Int = 144)
+      extends Monitor {
     require(widthSeconds > 0 && capBuckets > 0,
       "widthSeconds and capBuckets must be positive")
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var hist: Option[DataFrame] = None // (event_type, gap_bucket, n_gaps)
-    private var lastEvent: Option[DataFrame] = None // (__u, __ty, __t, __id)
+    // (event_type, gap_bucket, n_gaps)
+    private val hist = state("hist", DeltaState.sumBy("event_type", "gap_bucket")("n_gaps"))
+    private val lastEvent = state("last") // (__u, __ty, __t, __id)
 
     /** fold one micro-batch of raw events into histogram + last-event state */
     def update(batch: DataFrame): Unit = {
       val b = batch.select(col(userCol).as("__u"), col(typeCol).as("__ty"),
         unix_micros(col(tsCol)).as("__t"), col(idCol).as("__id"))
-      val events = lastEvent match {
-        case None => b
-        case Some(le) => le.unionByName(b)
-      }
+      val events = if (lastEvent.isEmpty) b else lastEvent.merged.unionByName(b)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("__u"), col("__ty")).orderBy(col("__t"), col("__id"))
-      val frozen = bridge.freeze(events
+      val frozen = Bridge.freeze(events
         .withColumn("__gap", col("__t") - lag(col("__t"), 1).over(w))
         .withColumn("__last",
           row_number().over(org.apache.spark.sql.expressions.Window
             .partitionBy(col("__u"), col("__ty"))
             .orderBy(col("__t").desc, col("__id").desc))))
-      val newGaps = frozen.filter(col("__gap").isNotNull)
+      hist.add(frozen.filter(col("__gap").isNotNull)
         .select(col("__ty").as("event_type"),
           least(expr(s"__gap div ${widthSeconds * 1000000L}"),
             lit(capBuckets.toLong)).as("gap_bucket"))
         .groupBy(col("event_type"), col("gap_bucket"))
-        .agg(count(lit(1)).as("n_gaps"))
-      hist = Some(bridge.freeze(hist match {
-        case None => newGaps
-        case Some(h) => h.unionByName(newGaps)
-          .groupBy(col("event_type"), col("gap_bucket"))
-          .agg(sum(col("n_gaps")).as("n_gaps"))
-      }))
-      lastEvent = Some(bridge.freeze(frozen.filter(col("__last") === 1)
-        .select(col("__u"), col("__ty"), col("__t"), col("__id"))))
+        .agg(count(lit(1)).as("n_gaps")))
+      lastEvent.replace(frozen.filter(col("__last") === 1)
+        .select(col("__u"), col("__ty"), col("__t"), col("__id")))
     }
 
     /** accreted (event_type, gap_bucket, lo_s, n_gaps) histogram */
-    def histogram: DataFrame = hist
-      .getOrElse(throw new IllegalStateException("no batches ingested"))
+    def histogram: DataFrame = hist.merged
       .withColumn("lo_s", col("gap_bucket") * widthSeconds)
       .select(col("event_type"), col("gap_bucket"), col("lo_s"), col("n_gaps"))
-
-    /** persist histogram + last-event state for crash-restart */
-    def saveState(dir: String): Unit = MonitorState.save(dir,
-      Map("hist" -> hist, "last" -> lastEvent))
-
-    /** restore both state tables from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit = {
-      hist = MonitorState.load(spark, dir, "hist")
-      lastEvent = MonitorState.load(spark, dir, "last")
-    }
   }
 
   /** Streaming lateness monitor — the ingest data-quality audit: how many
@@ -2311,44 +1917,24 @@ object Streaming {
     * [[foreachBatchMerge]]`(stream, lm.update)`.
     */
   class LatenessMonitor(typeCol: String = "event_type",
-                        tsCol: String = "ts", delay: String = "1 HOUR") {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var hwm: Option[DataFrame] = None // 1 row: (__hwm)
-    private var late: Option[DataFrame] = None // (event_type, n_late)
+                        tsCol: String = "ts", delay: String = "1 HOUR")
+      extends Monitor {
+    private val hwm = state("hwm", _.agg(max(col("__hwm")).as("__hwm"))) // 1 row: (__hwm)
+    private val late = state("late", DeltaState.sumBy("event_type")("n_late"))
 
     /** audit one micro-batch against the carried watermark, then raise it */
     def update(batch: DataFrame): Unit = {
       val b = batch.select(col(typeCol).as("__ty"), col(tsCol).as("__ts"))
-      val newLate = hwm.map(h => b.crossJoin(broadcast(h))
+      if (!hwm.isEmpty) late.add(b.crossJoin(broadcast(hwm.merged))
         .filter(col("__ts") < col("__hwm") - expr(s"INTERVAL $delay"))
         .groupBy(col("__ty").as("event_type")).agg(count(lit(1)).as("n_late")))
-      late = (late, newLate) match {
-        case (None, nl) => nl.map(bridge.freeze)
-        case (l, None) => l
-        case (Some(l), Some(nl)) => Some(bridge.freeze(
-          l.unionByName(nl).groupBy(col("event_type"))
-            .agg(sum(col("n_late")).as("n_late"))))
-      }
-      val bmax = b.agg(max(col("__ts")).as("__hwm"))
-      hwm = Some(bridge.freeze(hwm match {
-        case None => bmax
-        case Some(h) => h.unionByName(bmax).agg(max(col("__hwm")).as("__hwm"))
-      }))
+      hwm.add(b.agg(max(col("__ts")).as("__hwm")))
     }
 
     /** accreted (event_type, n_late) — types with zero late rows absent */
-    def lateCounts: DataFrame = late.getOrElse(
-      throw new IllegalStateException("need at least two batches"))
-
-    /** persist watermark + counts for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir,
-      Map("hwm" -> hwm, "late" -> late))
-
-    /** restore both state tables from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit = {
-      hwm = MonitorState.load(spark, dir, "hwm")
-      late = MonitorState.load(spark, dir, "late")
-    }
+    def lateCounts: DataFrame =
+      if (late.isEmpty) throw new IllegalStateException("need at least two batches")
+      else late.merged
   }
 
   /** Streaming entry-path monitor — accrete each user's first-`depth`
@@ -2366,10 +1952,9 @@ object Streaming {
   class PathMonitor(userCol: String = "user_id",
                     typeCol: String = "event_type",
                     tsCol: String = "ts", idCol: String = "event_id",
-                    depth: Int = 3) {
+                    depth: Int = 3) extends Monitor {
     require(depth > 0, "depth must be positive")
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private var state: Option[DataFrame] = None // (__u, __types)
+    private val prefixes = state("state") // (__u, __types)
 
     /** fold one micro-batch of raw events into the per-user prefix state */
     def update(batch: DataFrame): Unit = {
@@ -2383,30 +1968,21 @@ object Streaming {
         .agg(transform(
           array_sort(collect_list(struct(col("__rn").as("r"), col("__ty").as("t")))),
           x => x.getField("t")).as("__new"))
-      val merged = state match {
-        case None => b.select(col("__u"), slice(col("__new"), 1, depth).as("__types"))
-        case Some(st) => st.join(b, Seq("__u"), "full_outer")
+      prefixes.replace(
+        if (prefixes.isEmpty)
+          b.select(col("__u"), slice(col("__new"), 1, depth).as("__types"))
+        else prefixes.merged.join(b, Seq("__u"), "full_outer")
           .select(col("__u"), slice(concat(
             coalesce(col("__types"), array().cast("array<string>")),
             coalesce(col("__new"), array().cast("array<string>"))),
-            1, depth).as("__types"))
-      }
-      state = Some(bridge.freeze(merged))
+            1, depth).as("__types")))
     }
 
     /** current (path, depth, n_users) rollup over all users seen */
-    def paths: DataFrame = state.getOrElse(
-      throw new IllegalStateException("no batches ingested"))
+    def paths: DataFrame = prefixes.merged
       .select(array_join(col("__types"), ">").as("path"),
         size(col("__types")).as("depth"))
       .groupBy(col("path"), col("depth")).agg(count(lit(1)).as("n_users"))
-
-    /** persist the prefix state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("state" -> state))
-
-    /** restore prefix state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      state = MonitorState.load(spark, dir, "state")
   }
 
   /** Streaming incremental near-duplicate detection — the production
@@ -2426,19 +2002,18 @@ object Streaming {
     */
   class MinHashIndexDedup(idCol: String, textCol: String,
                           n: Int = 3, k: Int = 64, bands: Int = 16,
-                          threshold: Double = 0.7, maxBucket: Int = 2000) {
+                          threshold: Double = 0.7, maxBucket: Int = 2000)
+      extends Monitor {
     import graft.functions.Dedup
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
     // all three states are APPEND-ONLY (batches carry disjoint ids and the
     // match pairs are pair-local), so the LSM delta shape applies with the
     // identity combine: `add` freezes only the batch's own delta where the
     // round-12 shape re-froze the WHOLE accreted corpus/index/match tables
     // every micro-batch — the one remaining O(corpus)-per-batch write in
     // the ingestion path; compaction amortizes the occasional full fold
-    private def appendOnly = new DeltaState(df => df)
-    private val corpus = appendOnly
-    private val index = appendOnly
-    private val found = appendOnly
+    private val corpus = state("corpus", maxDeltas = 8)
+    private val index = state("index", maxDeltas = 8)
+    private val found = state("found", maxDeltas = 8)
 
     /** match one micro-batch against the prior index, then absorb it.
       * The batch is signed ONCE (its index is frozen up front and reused
@@ -2447,8 +2022,8 @@ object Streaming {
       * re-writes O(corpus) state — per-batch work is batch-proportional.
       */
     def update(batch: DataFrame): Unit = {
-      val (b, nb) = bridge.freezeCounted(batch.select(col(idCol), col(textCol)))
-      val (bIdx, ni) = bridge.freezeCounted(
+      val (b, nb) = Bridge.freezeCounted(batch.select(col(idCol), col(textCol)))
+      val (bIdx, ni) = Bridge.freezeCounted(
         Dedup.minhashIndex(b, idCol, textCol, n, k, bands))
       if (corpus.isEmpty) found.add(emptyMatches(batch))
       else found.add(Dedup.minhashAgainstIndex(corpus.merged, b, idCol, textCol,
@@ -2462,18 +2037,6 @@ object Streaming {
       * arrived in a strictly earlier micro-batch than new_id
       */
     def matches: DataFrame = found.merged
-
-    /** persist corpus+index+matches for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir,
-      Map("corpus" -> corpus.forSave, "index" -> index.forSave,
-        "found" -> found.forSave))
-
-    /** restore all three state tables from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit = {
-      corpus.reset(MonitorState.load(spark, dir, "corpus"))
-      index.reset(MonitorState.load(spark, dir, "index"))
-      found.reset(MonitorState.load(spark, dir, "found"))
-    }
 
     private def emptyMatches(batch: DataFrame): DataFrame = {
       import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
@@ -2513,16 +2076,18 @@ object Streaming {
   class IvfIndexIngest(idCol: String, vecCol: String,
                        nCentroids: Int = 16, nProbe: Int = 4,
                        trained: Option[DataFrame] = None,
-                       maxMeanList: Int = 0) {
+                       maxMeanList: Int = 0) extends Monitor {
     import graft.functions.Vectors
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private val trainedCounted = trained.map(t => bridge.freezeCounted(t
-      .select(col("cluster").as("__centid"), col("centroid").as("__centv"))
-      .withColumn("__centn", sqrt(Vectors.dot(col("__centv"), col("__centv"))))))
-    private var centroids: Option[DataFrame] = trainedCounted.map(_._1)
-    private val index = new DeltaState(df => df)
+    private val index = state("index", maxDeltas = 8)
+    private val centroids = state("centroids")
     private var nIndexed: Long = 0L
-    private var nCent: Long = trainedCounted.map(_._2).getOrElse(0L)
+    private var nCent: Long = 0L
+    trained.foreach { t =>
+      val (c, n) = Bridge.freezeCounted(t
+        .select(col("cluster").as("__centid"), col("centroid").as("__centv"))
+        .withColumn("__centn", sqrt(Vectors.dot(col("__centv"), col("__centv")))))
+      centroids.replaceFrozen(c, n); nCent = n
+    }
     // index size at the last compaction — the amortization anchor: once
     // √n outgrows maxMeanList the bar alone would trip on EVERY batch
     // (each a full n·√n re-route); requiring the index to have DOUBLED
@@ -2542,17 +2107,17 @@ object Streaming {
       */
     def update(batch: DataFrame): Unit = {
       if (centroids.isEmpty) {
-        val (c, n) = bridge.freezeCounted(batch
+        val (c, n) = Bridge.freezeCounted(batch
           .orderBy(col(idCol)).limit(nCentroids)
           .select(col(idCol).as("__centid"),
             col(vecCol).cast("array<double>").as("__centv"))
           .withColumn("__centn", sqrt(Vectors.dot(col("__centv"), col("__centv")))))
-        centroids = Some(c); nCent = n
+        centroids.replaceFrozen(c, n); nCent = n
       }
       // freeze + count ONLY the batch's routed delta (batch-proportional);
       // the accreted index is the delta union, never rewritten here
-      val (routed, nB) = bridge.freezeCounted(
-        Vectors.routeToCentroids(batch, idCol, vecCol, centroids.get))
+      val (routed, nB) = Bridge.freezeCounted(
+        Vectors.routeToCentroids(batch, idCol, vecCol, centroids.merged))
       index.addFrozen(routed, nB); nIndexed += nB
       if (maxMeanList > 0 && nIndexed > nCent * maxMeanList &&
         nIndexed >= 2L * math.max(lastCompactN, 1L)) compact()
@@ -2595,15 +2160,16 @@ object Streaming {
       lastCompactN = nIndexed
       val target = math.max(1L,
         math.ceil(math.sqrt(nIndexed.toDouble)).toLong).min(Int.MaxValue)
-      val (c2, n2) = bridge.freezeCounted(idx
+      val (c2, n2) = Bridge.freezeCounted(idx
         .orderBy(col("__cid")).limit(target.toInt)
         .select(col("__cid").as("__centid"), col("__cv").as("__centv"))
         .withColumn("__centn", sqrt(Vectors.dot(col("__centv"), col("__centv")))))
       val rerouted = Vectors.routeToCentroids(
         idx.select(col("__cid"), col("__cv")), "__cid", "__cv", c2)
-      centroids = Some(c2); nCent = n2
+      centroids.replaceFrozen(c2, n2); nCent = n2
       // the re-route rewrites everything anyway: reset the LSM to one delta
-      index.reset(Some(rerouted))
+      val (r, nr) = Bridge.freezeCounted(rerouted)
+      index.replaceFrozen(r, nr)
     }
 
     /** exact-cosine top-k of each query over its probed clusters of the
@@ -2614,7 +2180,7 @@ object Streaming {
       if (index.isEmpty)
         throw new IllegalStateException("no micro-batch ingested yet")
       Vectors.probedTopK(
-        Vectors.probeCentroids(queries, qId, qVec, centroids.get, nProbe),
+        Vectors.probeCentroids(queries, qId, qVec, centroids.merged, nProbe),
         index.merged, k)
     }
 
@@ -2625,21 +2191,20 @@ object Streaming {
       * restore point, letting mean list length exceed the maxMeanList bound
       * well past the pre-crash trajectory during a long resumed ingest
       */
-    def saveState(dir: String): Unit =
-      MonitorState.save(dir, Map("index" -> index.forSave,
-        "centroids" -> centroids,
-        "meta" -> index.forSave.map(ix => ix.sparkSession.range(1)
+    override def saveState(dir: String): Unit = {
+      val ix = index.forSave
+      MonitorState.save(dir, Seq("index" -> ix, "centroids" -> centroids.forSave,
+        "meta" -> ix.map(_.sparkSession.range(1)
           .select(lit(lastCompactN).as("lastCompactN")))))
+    }
 
     /** restore index + quantizer + compaction anchor from a [[saveState]]
       * checkpoint
       */
-    def restoreState(spark: SparkSession, dir: String): Unit = {
-      val loaded = MonitorState.load(spark, dir, "index")
-      index.reset(loaded)
-      centroids = MonitorState.load(spark, dir, "centroids")
+    override def restoreState(spark: SparkSession, dir: String): Unit = {
+      super.restoreState(spark, dir)
       nIndexed = if (index.isEmpty) 0L else index.merged.count()
-      nCent = centroids.map(_.count()).getOrElse(0L)
+      nCent = if (centroids.isEmpty) 0L else centroids.merged.count()
       lastCompactN = MonitorState.load(spark, dir, "meta")
         .map(_.select(col("lastCompactN")).head().getLong(0))
         // legacy checkpoint without meta: conservative 2×-restored anchor
@@ -2660,11 +2225,11 @@ object Streaming {
     */
   class BasketMonitor(basketCol: String, itemCol: String,
                       minSupport: Long = 2, topN: Int = 20,
-                      maxBasket: Int = 1000) {
+                      maxBasket: Int = 1000) extends Monitor {
     // the (basket, item) key set is corpus-scale: LSM delta state keeps
     // per-batch work batch-proportional (distinct is the associative
     // re-aggregation for a key set)
-    private val items = new DeltaState(_.distinct())
+    private val items = state("items", _.distinct(), maxDeltas = 8)
 
     /** fold one micro-batch's distinct (basket, item) rows in */
     def update(batch: DataFrame): Unit =
@@ -2677,14 +2242,6 @@ object Streaming {
       */
     def pairs: DataFrame = graft.functions.Events.basketPairsOfItems(
       items.merged, minSupport, topN, maxBasket)
-
-    /** persist the item state for crash-restart (call after update) */
-    def saveState(dir: String): Unit =
-      MonitorState.save(dir, Map("items" -> items.forSave))
-
-    /** restore item state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      items.reset(MonitorState.load(spark, dir, "items"))
   }
 
   /** Streaming FK-integrity monitor — live referential-integrity audit
@@ -2698,34 +2255,18 @@ object Streaming {
     * [[foreachBatchMerge]]`(stream, fm.update)`.
     */
   class FkAuditMonitor(parent: DataFrame, parentKey: String,
-                       childKey: String) {
-    private val bridge = org.apache.spark.sql.graftbridge.Bridge
-    private val pk = bridge.freeze(
+                       childKey: String) extends Monitor {
+    private val pk = Bridge.freeze(
       parent.select(col(parentKey).as("__k")).distinct())
-    private var counts: Option[DataFrame] = None
+    private val counts = state("counts", DeltaState.sumBy("__k")("__rows"))
 
     /** fold one micro-batch's per-key child row counts in */
-    def update(batch: DataFrame): Unit = {
-      val bc = batch.groupBy(col(childKey).as("__k"))
-        .agg(count(lit(1)).as("__rows"))
-      counts = Some(bridge.freeze(counts match {
-        case None => bc
-        case Some(c) => c.unionByName(bc).groupBy(col("__k"))
-          .agg(sum(col("__rows")).as("__rows"))
-      }))
-    }
+    def update(batch: DataFrame): Unit =
+      counts.add(batch.groupBy(col(childKey).as("__k"))
+        .agg(count(lit(1)).as("__rows")))
 
     /** current one-row integrity verdict — equals the batch fkAudit */
-    def readout: DataFrame = graft.functions.Audits.fkAuditOfCounts(
-      counts.getOrElse(throw new IllegalStateException("no batches ingested")),
-      pk)
-
-    /** persist the count state for crash-restart (call after update) */
-    def saveState(dir: String): Unit = MonitorState.save(dir, Map("counts" -> counts))
-
-    /** restore count state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      counts = MonitorState.load(spark, dir, "counts")
+    def readout: DataFrame = graft.functions.Audits.fkAuditOfCounts(counts.merged, pk)
   }
 
   /** Streaming cohort-LTV monitor — the live revenue curve: per-
@@ -2738,15 +2279,16 @@ object Streaming {
     * accreted state, never caches them). Wire with
     * [[foreachBatchMerge]]`(stream, lm.update)`.
     */
-  class LtvMonitor(custCol: String, dateCol: String, amountCol: String) {
+  class LtvMonitor(custCol: String, dateCol: String, amountCol: String)
+      extends Monitor {
     private val dec2 = org.apache.spark.sql.types.DecimalType(18, 2)
     // |customers|×|months| keys are corpus-scale: LSM delta state keeps
     // per-batch work batch-proportional; exact-decimal sums re-aggregate
     // associatively (held at DECIMAL(28,2) so the schema is stable across
     // compactions)
-    private val monthly = new DeltaState(
+    private val monthly = state("monthly",
       _.groupBy(col("__c"), col("__m")).agg(sum(col("__a"))
-        .cast(org.apache.spark.sql.types.DecimalType(28, 2)).as("__a")))
+        .cast(org.apache.spark.sql.types.DecimalType(28, 2)).as("__a")), maxDeltas = 8)
 
     /** fold one micro-batch's per-(customer, month) revenue in */
     def update(batch: DataFrame): Unit =
@@ -2757,14 +2299,6 @@ object Streaming {
     /** current cohort LTV curve — equals the batch cohortLtv */
     def curve: DataFrame =
       graft.functions.Events.cohortLtvOfMonthly(monthly.merged)
-
-    /** persist the revenue state for crash-restart (call after update) */
-    def saveState(dir: String): Unit =
-      MonitorState.save(dir, Map("monthly" -> monthly.forSave))
-
-    /** restore revenue state from a [[saveState]] checkpoint */
-    def restoreState(spark: SparkSession, dir: String): Unit =
-      monthly.reset(MonitorState.load(spark, dir, "monthly"))
   }
 
   /** Run a dimensional merge per micro-batch: the streaming form of

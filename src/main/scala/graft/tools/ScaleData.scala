@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * customer copy), so join fan-outs stay 1:1 with the base data and the
   * scaled run measures shuffle/scan growth, not join explosion.
   *
-  * As in ScaleBench, documents get a per-copy token salt so near-duplicate
+  * Documents get a per-copy token salt so near-duplicate
   * PAIRS grow linearly with copies (plain duplication would grow candidate
   * pairs quadratically and measure the wrong workload), and embeddings flip
   * component signs on odd copies to keep cluster populations honest.
@@ -72,8 +72,8 @@ object ScaleData {
     // every block 10x on BOTH sides — a 100x pair explosion that measures
     // the synthesized collision, not the operator (round-10 honest-sf1
     // evidence: stream_link read 50x wall at 10x). Salted prefixes grow
-    // block COUNT 10x at constant block size, like ScaleBench's own
-    // link workload.
+    // block COUNT 10x at constant block size, as a real 10x customer
+    // base would.
     write(scale(t("customer"), Map("c_custkey" -> custBase),
       perCopy = (d, k) => d.withColumn("c_name",
         concat(lit(s"c$k"), col("c_name")))), "customer")

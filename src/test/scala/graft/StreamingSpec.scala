@@ -1447,6 +1447,56 @@ class StreamingSpec extends SparkSpec {
     assert(pairs(dd3.matches) == pairs(ddRef.matches))
   }
 
+  test("restore then save into the same dir keeps every monitor's checkpoint intact") {
+    // a restored monitor that saves before its next update overwrites the
+    // very checkpoint files it restored from; the save must not destroy
+    // them, for one-run and LSM-shaped states alike
+    val ev = spark.read.parquet(stagedDir)
+    val probe = ev.select(col("user_id")).distinct().limit(20)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    // (update, save, restore, readout) of a fresh monitor
+    type M = (org.apache.spark.sql.DataFrame => Unit, String => Unit, String => Unit,
+      () => org.apache.spark.sql.DataFrame)
+    val monitors: Seq[(String, () => M)] = Seq(
+      "quantile" -> { () => val m = new Streaming.QuantileMonitor("value", width = 10.0)
+        (m.update, m.saveState, m.restoreState(spark, _), () => m.quantiles(Seq(0.5, 0.9))) },
+      "cardinality" -> { () => val m = new Streaming.CardinalityMonitor("user_id", b = 8)
+        (m.update, m.saveState, m.restoreState(spark, _), () => m.estimate) },
+      "cms" -> { () => val m = new Streaming.CmsMonitor("user_id")
+        (m.update, m.saveState, m.restoreState(spark, _), () => m.estimate(probe, "user_id")) },
+      "volume" -> { () => val m = new Streaming.VolumeMonitor("event_type", "ts")
+        (m.update, m.saveState, m.restoreState(spark, _), () => m.anomalies()) },
+      "transition" -> { () => val m = new Streaming.TransitionMonitor()
+        (m.update, m.saveState, m.restoreState(spark, _), () => m.matrix) },
+      "lateness" -> { () => val m = new Streaming.LatenessMonitor()
+        (m.update, m.saveState, m.restoreState(spark, _), () => m.lateCounts) },
+      "keycount" -> { () => val m = new Streaming.KeyCountMonitor("user_id")
+        (m.update, m.saveState, m.restoreState(spark, _), () => m.gini()) },
+      "kruskal" -> { () => val m = new Streaming.KruskalMonitor(col("event_type"), col("value"))
+        (m.update, m.saveState, m.restoreState(spark, _), () => m.readout) },
+      "retention" -> { () => val m = new Streaming.RetentionMonitor("user_id", "ts")
+        (m.update, m.saveState, m.restoreState(spark, _), () => m.retention) })
+    val failures = monitors.flatMap { case (name, fresh) =>
+      scala.util.Try {
+        val dir = java.nio.file.Files.createTempDirectory(s"resave_$name").toString
+        val (update, save, _, readout) = fresh()
+        (0 until 3).foreach(b => update(ev.filter(col("event_id") % 3 === b)))
+        save(dir)
+        val live = rows(readout())
+        // restore, then save into the same dir with no update in between
+        val (_, save2, restore2, readout2) = fresh()
+        restore2(dir)
+        save2(dir)
+        assert(rows(readout2()) == live, s"$name: re-saved monitor drifted")
+        // the re-saved checkpoint restores to the live readout
+        val (_, _, restore3, readout3) = fresh()
+        restore3(dir)
+        assert(rows(readout3()) == live, s"$name: re-saved checkpoint drifted")
+      }.failed.toOption.map(e => s"$name: ${e.getMessage.take(200)}")
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
   test("streaming cardinality monitor equals the one-pass corpus sketch") {
     import graft.functions.{Stats, TextAnalysis}
     val toks = spark.read.parquet(s"$sfDir/documents.parquet")
