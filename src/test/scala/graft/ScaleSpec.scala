@@ -115,7 +115,13 @@ class ScaleSpec extends SparkSpec {
     val vm = new graft.streaming.Streaming.VolumeMonitor("event_type", "ts")
     def sizeOf(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.optimizedPlan.collect { case p => p }.size
-    var rSizes, vSizes = Vector.empty[Int]
+    // live DeltaState runs = distinct frozen RDDs among the readout's
+    // leaves (the cohort self-join reads the activity state twice)
+    def runsOf(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.distinct.size
+    var rSizes, rRuns, vSizes = Vector.empty[Int]
     (1 to 10).foreach { b =>
       val batch = spark.range(0, 100).select(
         (col("id") % 20).as("user_id"),
@@ -124,30 +130,28 @@ class ScaleSpec extends SparkSpec {
       rm.update(batch)
       vm.update(batch)
       rSizes :+= sizeOf(rm.retention)
+      rRuns :+= runsOf(rm.retention)
       vSizes :+= sizeOf(vm.anomalies())
     }
     // VolumeMonitor folds eagerly per batch: flat plan forever
     assert(vSizes.distinct.size == 1,
       s"anomaly readout must stay flat across batches, got $vSizes")
-    // RetentionMonitor is LSM-shaped (DeltaState, maxDeltas = 8, GEOMETRIC
-    // size-tiered folds since round 15): live-run count follows the
-    // binary-counter pattern — equal-size runs merge on arrival, so the
-    // readout plan OSCILLATES with popcount(batches) instead of growing —
-    // and is bounded by the delta window, never by history. The plan for
-    // a single live run (the post-merge floor, seen whenever the counter
-    // collapses) must recur, and no batch may exceed the maxDeltas width.
-    // with equal-size batches, live runs after batch b = popcount(b)
-    // (binary-counter merging), so the readout plan size must be a pure
-    // function of popcount(b) — any history-proportional growth breaks this
-    val byRuns = (1 to 10).zip(rSizes)
-      .groupBy { case (b, _) => Integer.bitCount(b) }
-      .map { case (p, xs) => p -> xs.map(_._2).distinct }
+    // RetentionMonitor is LSM-shaped (DeltaState, maxDeltas = 8): a batch
+    // adds one run, and runs merge only once their count passes
+    // maxDeltas, so after batch b there are min(b, 8) live runs and the
+    // readout plan stops growing at the delta window, never tracking
+    // history. The readout plan size must be a pure function of the live
+    // run count — any history-proportional growth breaks this
+    assert(rRuns == (1 to 10).map(_ min 8),
+      s"live runs must be min(batches, maxDeltas), got $rRuns")
+    val byRuns = rRuns.zip(rSizes).groupBy(_._1)
+      .map { case (r, xs) => r -> xs.map(_._2).distinct }
     assert(byRuns.values.forall(_.size == 1),
-      s"plan size must be a function of live-run count, got $rSizes")
+      s"plan size must be a function of live-run count, got $rSizes for runs $rRuns")
     // more live runs → strictly wider (but still window-bounded) plan
     val ordered = byRuns.toSeq.sortBy(_._1).map(_._2.head)
     assert(ordered == ordered.sorted && ordered.distinct == ordered,
-      s"plan width must grow only with live runs, got $rSizes")
+      s"plan width must grow only with live runs, got $rSizes for runs $rRuns")
     // and the accreted state is correct: 10 days of 20 users / 3 types
     assert(rm.retention.agg(sum("active_users")).head().getLong(0) == 10 * 20)
     assert(vm.anomalies().count() == 10 * 3)
