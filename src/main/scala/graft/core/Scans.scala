@@ -54,6 +54,11 @@ object Scans {
     }
   }
 
+  /** Rows per scan task when [[cumulative]] sizes its partitioning from a
+    * known row count.
+    */
+  val RowsPerPartition: Long = 1L << 18
+
   /** Exact distributed running totals of `sumCols` in `orderCol` order —
     * the scale-safe replacement for an unpartitioned cumulative window.
     *
@@ -105,17 +110,15 @@ object Scans {
     // scale-ADAPTIVE: a few-hundred-row life/count table takes parts=1 —
     // no approxQuantile pass, no range machinery, one tiny partitioned
     // window — while a genuinely large frozen frame still fans out
-    // (spark.graft.scan.rowsPerPartition rows per task, default 256k,
-    // capped at the session's shuffle parallelism). Result-identical for
-    // ANY parts (associative integral/decimal sums, see above).
+    // ([[RowsPerPartition]] rows per task, capped at the session's
+    // shuffle parallelism). Result-identical for ANY parts (associative
+    // integral/decimal sums, see above).
     val (f, n) = org.apache.spark.sql.graftbridge.Bridge.ensureFrozenCounted(df)
     val parts =
       if (numPartitions > 0) numPartitions
       else {
         val cap = df.sparkSession.sessionState.conf.numShufflePartitions
-        val rowsPer = df.sparkSession.conf
-          .get("spark.graft.scan.rowsPerPartition", "262144").toLong
-        math.max(1L, math.min(cap.toLong, (n + rowsPer - 1) / rowsPer)).toInt
+        math.max(1L, math.min(cap.toLong, (n + RowsPerPartition - 1) / RowsPerPartition)).toInt
       }
     val probs = (1 until parts).map(_.toDouble / parts).toArray
     val bounds: Array[Double] =

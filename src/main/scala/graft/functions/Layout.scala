@@ -71,7 +71,7 @@ object Layout {
     // maxExisting = -1 makes the dense keys 0-based ordinals; the assigner
     // sorts ascending, so order by the negated size for descending
     val (keyed, _) = DistributedDenseAssigner.assignWithMax(
-      df, "__ord", -1L, Seq(negate(col(sizeCol)), col(idCol)), materialize = true)
+      df, "__ord", -1L, Seq(negate(col(sizeCol)), col(idCol)))
     val cycle = lit(2L * shards)
     val pos = col("__ord") % cycle
     keyed.withColumn("shard",

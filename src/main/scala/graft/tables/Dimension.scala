@@ -29,18 +29,21 @@ trait ManagedTable {
   *  - Lookup joins broadcast the dimension only when Catalyst's size estimate
   *    is under [[graft.core.Joins.BroadcastThresholdBytes]]; larger dims take
   *    a shuffle hash/sort-merge join (AQE may still convert at runtime).
-  *  - Mutations materialize their state via `localCheckpoint` (when
-  *    `autoCheckpoint`, the default): append paths checkpoint only the keyed
-  *    delta, rewrite paths checkpoint the new state. Without this, K
-  *    sequential ensure/scdensure batches stack K plan layers and every
-  *    `currentMaxKey` action re-executes the whole lineage — O(K²) work (the
-  *    steady state of a streaming foreachBatch merge). With it each batch
-  *    costs O(delta) or O(state). For durability across executor loss use
-  *    `save()`/`init()` parquet swaps at commit points — localCheckpoint
-  *    trades fault-tolerance for speed, exactly right for intra-load state.
-  *  - `currentMaxKey` is tracked incrementally: key assignment bumps it from
-  *    the materialized delta instead of re-scanning (let alone re-computing)
-  *    the full table.
+  *  - Every mutation freezes its product (`Bridge.freeze`: one
+  *    `localCheckpoint` job that also records the frame's row count and
+  *    stored bytes as its Catalyst statistics): append paths freeze only the
+  *    keyed delta, rewrite paths freeze the new state. Without this, K
+  *    sequential ensure/scdensure batches would stack K plan layers and
+  *    every `currentMaxKey` action would re-execute the whole lineage —
+  *    O(K²) work (the steady state of a streaming foreachBatch merge). With
+  *    it each batch costs O(delta) or O(state), and the frozen state's
+  *    statistics let the size gate above broadcast it when it is small. For
+  *    durability across executor loss use `save()`/`init()` parquet swaps
+  *    at commit points — localCheckpoint trades fault-tolerance for speed,
+  *    exactly right for intra-load state.
+  *  - `currentMaxKey` is tracked incrementally: key assignment reports the
+  *    new max from the frozen delta instead of re-scanning (let alone
+  *    re-computing) the full table.
   *
   * Caching subsumption: `CachedDimension`/`BulkDimension`'s FIFO caches
   * (tables.py:549-616, 2777-2984) map to materialized state + (size-aware)
@@ -53,9 +56,7 @@ class Dimension(
     val lookupatts: Seq[String],
     val defaultIdValue: Long = -1L,
     val keyAssigner: KeyAssigner = DistributedDenseAssigner,
-    val broadcastLookups: Boolean = true,
-    val cacheState: Boolean = false,
-    val autoCheckpoint: Boolean = true
+    val cacheState: Boolean = false
 ) extends ManagedTable {
 
   protected var state: DataFrame = _
@@ -88,17 +89,15 @@ class Dimension(
 
   def current: DataFrame = state
 
-  /** Materialize a mutation product, truncating lineage (no-op when
-    * autoCheckpoint is off — then the caller owns persistence). Eager on
-    * purpose: a lazy checkpoint lets several downstream plan branches race
-    * to materialize the same blocks and duplicates the work (measured 1.4×
+  /** Materialize a mutation product, truncating lineage. Eager on purpose:
+    * a lazy checkpoint lets several downstream plan branches race to
+    * materialize the same blocks and duplicates the work (measured 1.4×
     * slower across the table-query suite at sf0.1).
     */
   protected def materialize(df: DataFrame): DataFrame =
-    if (autoCheckpoint) org.apache.spark.sql.graftbridge.Bridge.freeze(df) else df
+    org.apache.spark.sql.graftbridge.Bridge.freeze(df)
 
-  protected def dimForJoin: DataFrame =
-    if (broadcastLookups) graft.core.Joins.maybeBroadcast(state) else state
+  protected def dimForJoin: DataFrame = graft.core.Joins.maybeBroadcast(state)
 
   /** Bulk lookup: resolve the surrogate key for every input row by equi-join
     * on lookupatts; misses get `defaultIdValue`.
@@ -140,16 +139,12 @@ class Dimension(
     requireColumns(mapped, attributes, "insert")
     val in = mapped.select(attributes.map(col): _*)
     val maxKey = currentMaxKey
-    // single-pass: the assigner materializes the delta itself (that's its
+    // single-pass: the assigner freezes the delta itself (that's its
     // partition-freeze point), so keying is a lazy expression over the
     // checkpointed blocks — no second checkpoint here
-    val (assigned, newMax) = keyAssigner.assignWithMax(in, key, maxKey, lookupatts.map(col), autoCheckpoint)
-    val keyed = assigned.select(allColumns.map(col): _*)
-    state = state.unionByName(keyed)
-    newMax match {
-      case Some(m) => knownMaxKey = Some(math.max(maxKey, m))
-      case None => bumpMaxKey(keyed)
-    }
+    val (assigned, newMax) = keyAssigner.assignWithMax(in, key, maxKey, lookupatts.map(col))
+    state = state.unionByName(assigned.select(allColumns.map(col): _*))
+    knownMaxKey = Some(newMax)
     this
   }
 
@@ -196,15 +191,6 @@ class Dimension(
     m
   }
 
-  /** All assigners hand out keys strictly above maxExisting, so the new
-    * global max is the delta's max (delta is materialized → cheap scan).
-    */
-  protected def bumpMaxKey(keyedDelta: DataFrame): Unit = {
-    val r = keyedDelta.agg(max(col(key).cast("long"))).head()
-    if (!r.isNullAt(0))
-      knownMaxKey = Some(math.max(knownMaxKey.getOrElse(0L), r.getLong(0)))
-  }
-
   /** ensure: bulk lookup-or-insert. New members (anti-join on lookupatts,
     * first occurrence per member wins) are optionally enriched by
     * `rowexpander` — applied ONLY to the new-member set, preserving the
@@ -239,17 +225,12 @@ class Dimension(
     val newMembers = firstPerMember.join(dimForJoin.select(lookupatts.map(col): _*), lookupatts, "left_anti")
     val expanded = rowexpander(newMembers)
     val maxKey = currentMaxKey
-    // single-pass: materialization happens inside the assigner (upstream
+    // single-pass: the freeze happens inside the assigner (upstream
     // anti-join computes exactly once); keying stays a lazy Tungsten
     // expression over the checkpointed delta
-    val (assigned, newMax) = keyAssigner.assignWithMax(expanded, key, maxKey, lookupatts.map(col), autoCheckpoint)
-    val keyed = assigned.select(allColumns.map(col): _*)
-
-    state = state.unionByName(keyed)
-    newMax match {
-      case Some(m) => knownMaxKey = Some(math.max(maxKey, m))
-      case None => bumpMaxKey(keyed)
-    }
+    val (assigned, newMax) = keyAssigner.assignWithMax(expanded, key, maxKey, lookupatts.map(col))
+    state = state.unionByName(assigned.select(allColumns.map(col): _*))
+    knownMaxKey = Some(newMax)
 
     // resolve keys for the full input (hits old + new members)
     in.join(dimForJoin.select((key +: lookupatts).map(col): _*), lookupatts, "left")

@@ -15,22 +15,20 @@ class FactTable(
     val name: String,
     val keyrefs: Seq[String],
     val measures: Seq[String],
-    override val dependsOn: Seq[String] = Nil,
-    val autoCheckpoint: Boolean = true
+    override val dependsOn: Seq[String] = Nil
 ) extends ManagedTable {
 
   protected var state: DataFrame = _
   def allColumns: Seq[String] = keyrefs ++ measures
 
-  /** Materialize a mutation product, truncating lineage (no-op when
-    * autoCheckpoint is off — then the caller owns persistence). Same contract
-    * as [[Dimension.materialize]]: without it, K sequential insert/ensure/
-    * merge batches stack K plan layers and every downstream action re-executes
-    * the whole history — O(K²), the steady state of a streaming foreachBatch
-    * merge onto an accumulating fact.
+  /** Freeze a mutation product, truncating lineage. Same contract as
+    * [[Dimension.materialize]]: without it, K sequential insert/ensure/merge
+    * batches would stack K plan layers and every downstream action would
+    * re-execute the whole history — O(K²), the steady state of a streaming
+    * foreachBatch merge onto an accumulating fact.
     */
   protected def materialize(df: DataFrame): DataFrame =
-    if (autoCheckpoint) org.apache.spark.sql.graftbridge.Bridge.freeze(df) else df
+    org.apache.spark.sql.graftbridge.Bridge.freeze(df)
 
   /** Append a delta as a materialized leaf: state stays a flat union of
     * checkpointed blocks, never a recompute lineage.

@@ -18,22 +18,20 @@ trait KeyAssigner extends Serializable {
   /** Add column `keyCol` with unique values > maxExisting to `newMembers`. */
   def assign(newMembers: DataFrame, keyCol: String, maxExisting: Long, orderBy: Seq[Column]): DataFrame
 
-  /** Like `assign`, additionally reporting the new max key when the
-    * assignment already knows it (saves the caller a max-scan job per
-    * mutation). With `materialize=true` the delta is frozen exactly once, at
-    * the point the partition layout must freeze (Bridge.freeze — checkpoint +
-    * count in ONE job).
-    *
-    * Determinism contract: assigners that derive keys from physical row
+  /** `assign`, frozen, plus the new max key (`maxExisting` when the delta
+    * is empty). This is the one key-assignment contract the managed tables
+    * use: the keyed delta is frozen (Bridge.freeze — checkpoint + count in
+    * ONE job), because assigners that derive keys from physical row
     * placement (partition id / position) are only stable across repeated
-    * actions AFTER materialization. With `materialize=false` the caller must
-    * materialize the returned frame itself before reusing it.
+    * actions AFTER materialization. The default reads the max off the
+    * frozen delta (one scan of its blocks); assigners that know it from
+    * their own count override this and save that job.
     */
   def assignWithMax(newMembers: DataFrame, keyCol: String, maxExisting: Long,
-                    orderBy: Seq[Column],
-                    materialize: Boolean = false): (DataFrame, Option[Long]) = {
-    val keyed = assign(newMembers, keyCol, maxExisting, orderBy)
-    (if (materialize) org.apache.spark.sql.graftbridge.Bridge.freeze(keyed) else keyed, None)
+                    orderBy: Seq[Column]): (DataFrame, Long) = {
+    val keyed = org.apache.spark.sql.graftbridge.Bridge.freeze(assign(newMembers, keyCol, maxExisting, orderBy))
+    val r = keyed.agg(max(col(keyCol).cast("long"))).head()
+    (keyed, if (r.isNullAt(0)) maxExisting else math.max(maxExisting, r.getLong(0)))
   }
 }
 
@@ -77,11 +75,8 @@ final class PartitionRangeAssigner(stride: Long = 1L << 33) extends KeyAssigner 
   *     upstream;
   *  3. key = maxExisting + partition offset + position-in-partition, a pure
   *     codegen'd column expression (`monotonically_increasing_id`'s low 33
-  *     bits are the position within the partition) — on the materialized
-  *     paths rows never leave Tungsten, no `.rdd` Row round-trip, no extra
-  *     map job. (The caller-owns-persistence huge-delta path is the one
-  *     exception: there counts and keys must share one RDD lineage, which
-  *     costs a Row round-trip.)
+  *     bits are the position within the partition) — rows never leave
+  *     Tungsten, no `.rdd` Row round-trip, no extra map job.
   *
   * Produces exactly the keys `MaxPlusRowNumberAssigner` would (row_number
   * over the global `orderBy` order). The single-partition path is principled,
@@ -105,69 +100,38 @@ class DistributedDenseAssigner(
     assignWithMax(newMembers, keyCol, maxExisting, orderBy)._1
 
   override def assignWithMax(newMembers: DataFrame, keyCol: String, maxExisting: Long,
-                             orderBy: Seq[Column],
-                             materialize: Boolean = false): (DataFrame, Option[Long]) = {
-    val spark = newMembers.sparkSession
+                             orderBy: Seq[Column]): (DataFrame, Long) = {
     val asc = orderBy.map(_.asc)
     val posInPartition = monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1))
-
-    if (materialize) {
-      // the ONE pass over the upstream plan: checkpoint + count fused into a
-      // single job; everything below reads the frozen blocks
-      val (delta, total) = org.apache.spark.sql.graftbridge.Bridge.freezeCounted(newMembers)
-      if (total == 0L) {
-        (delta.withColumn(keyCol, lit(maxExisting + 1L)), Some(maxExisting))
-      } else if (total <= smallDeltaRows) {
-        // bounded delta: narrow single-partition sort over the frozen blocks —
-        // no shuffle, no sampling, deterministic on re-evaluation (the input
-        // layout is frozen), cheap enough to stay lazy (PROVEN <= smallDeltaRows)
-        val keyed = delta.coalesce(1).sortWithinPartitions(asc: _*)
-          .withColumn(keyCol, lit(maxExisting + 1L) + posInPartition)
-        (keyed, Some(maxExisting + total))
-      } else {
-        // huge delta: parallel range sort, frozen so the partition layout the
-        // offsets were counted from IS the layout the key expression sees
-        val parts = spark.sessionState.conf.numShufflePartitions
-        val sorted = org.apache.spark.sql.graftbridge.Bridge.freeze(
-          delta.repartitionByRange(parts, asc: _*).sortWithinPartitions(asc: _*))
-        // rows per range-partition (RangePartitioner may emit <= parts; absent
-        // ids count 0): one partial-agg scan, 1 output row per partition
-        val counts = new Array[Long](parts max 1)
-        sorted.groupBy(spark_partition_id().as("__p")).agg(count(lit(1)).as("__n"))
-          .collect().foreach(r => counts(r.getInt(0)) = r.getLong(1))
-        val offsets = counts.scanLeft(0L)(_ + _)
-        val keyed = sorted.withColumn(keyCol,
-          lit(maxExisting + 1L) +
-            element_at(typedLit(offsets.init.toSeq), spark_partition_id() + 1) +
-            posInPartition)
-        (keyed, Some(maxExisting + total))
-      }
+    // the ONE pass over the upstream plan: checkpoint + count fused into a
+    // single job; everything below reads the frozen blocks
+    val (delta, total) = org.apache.spark.sql.graftbridge.Bridge.freezeCounted(newMembers)
+    if (total == 0L) {
+      (delta.withColumn(keyCol, lit(maxExisting + 1L)), maxExisting)
+    } else if (total <= smallDeltaRows) {
+      // bounded delta: narrow single-partition sort over the frozen blocks —
+      // no shuffle, no sampling, deterministic on re-evaluation (the input
+      // layout is frozen), cheap enough to stay lazy (PROVEN <= smallDeltaRows)
+      val keyed = delta.coalesce(1).sortWithinPartitions(asc: _*)
+        .withColumn(keyCol, lit(maxExisting + 1L) + posInPartition)
+      (keyed, maxExisting + total)
     } else {
-      // Caller-owns-persistence: nothing is frozen, so counts, keys AND the
-      // reported max MUST all derive from ONE shared RDD lineage — a
-      // re-executed plan can produce different rows (unstable upstream) or a
-      // re-sampled range shuffle, and any value collected from a separate
-      // execution (a count, an offset) would silently disagree with the keys
-      // actually assigned. The pre-count below only selects the sort
-      // strategy; every emitted number comes from the shared lineage.
-      val total = newMembers.count()
-      val parts =
-        if (total <= smallDeltaRows) 1 else spark.sessionState.conf.numShufflePartitions
-      val sorted =
-        if (parts == 1) newMembers.coalesce(1).sortWithinPartitions(asc: _*)
-        else newMembers.repartitionByRange(parts, asc: _*).sortWithinPartitions(asc: _*)
-      val schema = org.apache.spark.sql.types.StructType(
-        sorted.schema.fields :+ org.apache.spark.sql.types.StructField(
-          keyCol, org.apache.spark.sql.types.LongType, nullable = false))
-      val rdd0 = sorted.rdd
-      val counts = rdd0.mapPartitionsWithIndex((i, it) => Iterator((i, it.size.toLong)))
-        .collect().sortBy(_._1).map(_._2)
+      // huge delta: parallel range sort, frozen so the partition layout the
+      // offsets were counted from IS the layout the key expression sees
+      val parts = newMembers.sparkSession.sessionState.conf.numShufflePartitions
+      val sorted = org.apache.spark.sql.graftbridge.Bridge.freeze(
+        delta.repartitionByRange(parts, asc: _*).sortWithinPartitions(asc: _*))
+      // rows per range-partition (RangePartitioner may emit <= parts; absent
+      // ids count 0): one partial-agg scan, 1 output row per partition
+      val counts = new Array[Long](parts max 1)
+      sorted.groupBy(spark_partition_id().as("__p")).agg(count(lit(1)).as("__n"))
+        .collect().foreach(r => counts(r.getInt(0)) = r.getLong(1))
       val offsets = counts.scanLeft(0L)(_ + _)
-      val rdd = rdd0.mapPartitionsWithIndex { (i, it) =>
-        var key = maxExisting + offsets(i)
-        it.map { r => key += 1; org.apache.spark.sql.Row.fromSeq(r.toSeq :+ key) }
-      }
-      (spark.createDataFrame(rdd, schema), Some(maxExisting + offsets.lastOption.getOrElse(0L)))
+      val keyed = sorted.withColumn(keyCol,
+        lit(maxExisting + 1L) +
+          element_at(typedLit(offsets.init.toSeq), spark_partition_id() + 1) +
+          posInPartition)
+      (keyed, maxExisting + total)
     }
   }
 }

@@ -194,13 +194,13 @@ class ScdDimension(
       case None => stamped
     }
 
-    // 5a. key the new versions FIRST: the assigner materializes the delta
+    // 5a. key the new versions FIRST: the assigner freezes the delta
     // (single pass — the whole batch pipeline above computes exactly once),
     // and everything downstream reads the checkpointed blocks.
     val newClean = withMin.select(
       (lookupatts ++ valueAtts :+ versionatt :+ fromatt :+ toatt :+ "__orig_from").distinct.map(col): _*)
     val maxKey = currentMaxKey
-    val (keyed, newMax) = keyAssigner.assignWithMax(newClean, key, maxKey, lk :+ col(versionatt), autoCheckpoint)
+    val (keyed, newMax) = keyAssigner.assignWithMax(newClean, key, maxKey, lk :+ col(versionatt))
 
     // first REAL change time per member, read from the materialized delta
     // (__orig_from is the pre-minFrom value, so the close time is correct
@@ -249,9 +249,9 @@ class ScdDimension(
     }
 
     state = materialize(next)
-    // keys are untouched by the rewrite, so the assigner's reported max (when
-    // known) carries over; otherwise recompute lazily over materialized state
-    knownMaxKey = newMax.map(m => math.max(maxKey, m))
+    // keys are untouched by the rewrite, so the assigner's reported max
+    // carries over
+    knownMaxKey = Some(newMax)
     this.current
   }
 

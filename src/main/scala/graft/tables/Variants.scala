@@ -10,10 +10,11 @@ import graft.sources.Writers
   */
 
 /** CachedDimension (reference tables.py:549-686): lookups served from a
-  * cache. Here the state DataFrame is Spark-cached at init and after
-  * mutations; lookup joins broadcast when small (the distributed cache-probe).
-  * `prefill`/`cachesize` vanish: Spark caches whole partitions and evicts
-  * under memory pressure natively.
+  * cache. Here the initial state is Spark-cached at `init`; every mutation
+  * product is frozen (like every Dimension's), which already persists its
+  * blocks, and lookup joins broadcast when the state is small (the
+  * distributed cache-probe). `prefill`/`cachesize` vanish: Spark caches
+  * whole partitions and evicts under memory pressure natively.
   */
 class CachedDimension(
     name: String,
@@ -23,7 +24,7 @@ class CachedDimension(
     defaultIdValue: Long = -1L,
     keyAssigner: KeyAssigner = DistributedDenseAssigner
 ) extends Dimension(name, key, attributes, lookupatts, defaultIdValue,
-  keyAssigner, broadcastLookups = true, cacheState = true)
+  keyAssigner, cacheState = true)
 
 /** BulkDimension (reference tables.py:2777-2984): full in-memory cache +
   * bulk loading — lookup/ensure never hit the target database; all writes

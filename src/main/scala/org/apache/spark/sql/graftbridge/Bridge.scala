@@ -1,20 +1,26 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Statistics, SubqueryAlias}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Column <-> Expression bridge. `ExpressionUtils` is private[sql] in
-  * Spark 4's classic backend; this object lives in the org.apache.spark.sql
-  * namespace solely to re-expose the conversions custom Catalyst expressions
-  * need, plus one checkpoint-hygiene helper. No other internals are touched.
+/** Column <-> Expression bridge plus the engine's one freeze. `ExpressionUtils`
+  * is private[sql] in Spark 4's classic backend; this object lives in the
+  * org.apache.spark.sql namespace to re-expose the conversions custom
+  * Catalyst expressions need, and to build the frozen leaf
+  * ([[freezeCounted]]): a `LogicalRDD` over checkpointed blocks that carries
+  * its own statistics, which only this namespace can construct.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Eagerly materialize `df` (RDD-level localCheckpoint) and rebuild a CLEAN
-    * leaf over the checkpointed blocks, reporting the row count for free.
+    * leaf over the checkpointed blocks that reports what it holds: its
+    * statistics carry the exact row count and the bytes actually stored.
     *
     * Why not `Dataset.localCheckpoint`: (a) it bakes the physical plan's
     * outputOrdering/outputPartitioning into the resulting LogicalRDD — those
@@ -24,48 +30,50 @@ object Bridge {
     * blocks here is the SAME single job — callers that need the delta size
     * (key assignment) get it without a second pass.
     *
+    * The statistics cost no job either: the copying map sums each stored
+    * row's `UnsafeRow.getSizeInBytes` into an accumulator, the way Spark
+    * sizes a cached `InMemoryRelation`. So Catalyst plans joins over a
+    * frozen frame by its real size (a size-gated broadcast opens when it is
+    * small), and `LogicalRDD.newInstance` keeps the statistics across
+    * self-join deduplication.
+    *
     * The `.copy()` is required: the executed plan reuses UnsafeRow buffers
     * per partition, and the persisted blocks must hold independent rows.
     */
   def freezeCounted(df: DataFrame): (DataFrame, Long) = {
-    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val rdd = df.queryExecution.toRdd.map(_.copy())
+    val spark = df.sparkSession.asInstanceOf[SparkSession]
+    val bytes = spark.sparkContext.longAccumulator
+    val fallbackRowBytes = df.schema.defaultSize.toLong
+    val rdd = df.queryExecution.toRdd.map { r =>
+      val c = r.copy()
+      bytes.add(c match {
+        case u: UnsafeRow => u.getSizeInBytes.toLong
+        case _ => fallbackRowBytes
+      })
+      c
+    }
     rdd.localCheckpoint()
     val n = rdd.count() // the one job: computes, persists, truncates lineage, counts
-    frozenCounts.put((spark.sparkContext.applicationId, rdd.id), n)
-    (spark.internalCreateDataFrame(rdd, df.schema), n)
+    val stats = Statistics(sizeInBytes = BigInt(bytes.value), rowCount = Some(BigInt(n)))
+    val leaf = LogicalRDD(DataTypeUtils.toAttributes(df.schema), rdd)(spark, Some(stats))
+    (Dataset.ofRows(spark, leaf), n)
   }
 
   def freeze(df: DataFrame): DataFrame = freezeCounted(df)._1
 
-  // ------------------------------------------------------------------
-  // materialized-size introspection (round 16, guide §2: partitioning
-  // should derive from input size, not a constant)
-  // ------------------------------------------------------------------
-
-  /** (applicationId, rdd id) → row count for every frame this JVM froze.
-    * One small pair per freeze — bounded by freezes per JVM, never by
-    * data — so no eviction is needed. Keyed by application so a later
-    * SparkContext (rdd ids restart at 0) can never alias a stale entry
-    * and make [[knownCount]] report a bogus count (round 17, ADVICE).
-    */
-  private val frozenCounts =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Long]
-
   /** An upper bound on `df`'s row count, if `df` is a frame produced by
-    * [[freezeCounted]] in this JVM — possibly under cheap row-local
-    * wrappers (Project/Filter/SubqueryAlias only; anything else returns
-    * None). Free: no job runs. Exact for Project/SubqueryAlias chains;
-    * a Filter only removes rows, so the bound stays valid for partition
-    * sizing. Lets downstream operators size their partitioning from the
-    * REAL input instead of a config constant.
+    * [[freezeCounted]] — possibly under cheap row-local wrappers
+    * (Project/Filter/SubqueryAlias only; anything else returns None). Free:
+    * no job runs; the count is the frozen leaf's own `rowCount` statistic
+    * (this is the only code that builds a `LogicalRDD` with one). Exact for
+    * Project/SubqueryAlias chains; a Filter only removes rows, so the bound
+    * stays valid for partition sizing. Lets downstream operators size their
+    * partitioning from the REAL input instead of a config constant.
     */
   def knownCount(df: DataFrame): Option[Long] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
-    val appId = df.sparkSession.sparkContext.applicationId
     @annotation.tailrec
     def leaf(p: LogicalPlan): Option[Long] = p match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => frozenCounts.get((appId, l.rdd.id))
+      case l: LogicalRDD => l.computeStats().rowCount.map(_.toLong)
       case pr: Project => leaf(pr.child)
       case f: Filter => leaf(f.child)
       case a: SubqueryAlias => leaf(a.child)

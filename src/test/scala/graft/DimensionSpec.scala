@@ -141,4 +141,37 @@ class DimensionSpec extends SparkSpec {
     assert(keys.distinct.length == keys.length)
     assert(keys.forall(_ > 5000L))
   }
+
+  test("PartitionRangeAssigner in a Dimension: a second ensure keys above the first batch's max") {
+    val dim = new Dimension("dp", "k", Seq("name"), Seq("name"),
+      keyAssigner = new PartitionRangeAssigner(1L << 20))
+    dim.init(spark.range(0).select(col("id").as("k"), lit("").as("name")).limit(0))
+    def batch(from: Long, to: Long) =
+      spark.range(from, to, 1, 3).select(concat(lit("n"), col("id")).as("name"))
+    dim.ensure(batch(0, 300))
+    val firstMax = dim.current.agg(max("k")).head().getLong(0)
+    dim.ensure(batch(200, 500)) // 100 known members, 200 new ones
+    val rows = dim.current.select("name", "k").collect().map(r => (r.getString(0), r.getLong(1)))
+    assert(rows.length == 500)
+    assert(rows.map(_._2).distinct.length == 500, "keys must be unique")
+    val second = rows.filter(_._1.drop(1).toInt >= 300).map(_._2)
+    assert(second.length == 200 && second.forall(_ > firstMax))
+  }
+
+  test("DistributedDenseAssigner gives MaxPlusRowNumberAssigner's keys on the small and range paths") {
+    // Scd's key order: lookupatts :+ version, so a member's versions are
+    // ranked by the second column
+    val df = spark.range(0, 600, 1, 3).select(
+      format_string("m%03d", col("id") % 200).as("member"),
+      (col("id") / 200).cast("int").as("version"))
+    val orderBy = Seq(col("member"), col("version"))
+    def keyed(a: KeyAssigner) = {
+      val (out, newMax) = a.assignWithMax(df, "k", 41L, orderBy)
+      (out.collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet, newMax)
+    }
+    val ref = keyed(MaxPlusRowNumberAssigner)
+    assert(ref._2 == 641L && ref._1.map(_._3) == (42L to 641L).toSet)
+    assert(keyed(DistributedDenseAssigner) == ref, "small path")
+    assert(keyed(new DistributedDenseAssigner(smallDeltaRows = 100)) == ref, "range path")
+  }
 }

@@ -12,8 +12,7 @@ class ScaleSpec extends SparkSpec {
     val big = spark.range(0, 4000000).select(
       col("id").as("k"), concat(lit("member_"), col("id")).as("name"),
       repeat(lit("x"), 64).as("pad"))
-    val dim = new Dimension("bigdim", "k", Seq("name", "pad"), Seq("name"),
-      autoCheckpoint = false)
+    val dim = new Dimension("bigdim", "k", Seq("name", "pad"), Seq("name"))
     dim.init(big)
     val probe = spark.range(0, 100).select(concat(lit("member_"), col("id")).as("name"))
     val bigPlan = dim.lookup(probe).queryExecution.executedPlan.toString
@@ -65,20 +64,6 @@ class ScaleSpec extends SparkSpec {
     assert(d.current.count() == 5200)
     assert(d.current.select("key").distinct().count() == 5200)
     assert(!d.current.queryExecution.executedPlan.toString.contains("Window"))
-  }
-
-  test("huge-delta path with caller-owned persistence still yields consistent dense keys") {
-    // materialize=false (autoCheckpoint off): counts and keys must derive
-    // from the SAME shuffle execution — a re-run range shuffle re-samples
-    // bounds, so offsets from another execution would duplicate/gap keys
-    val d = new Dimension("drf", "key", Seq("name"), Seq("name"),
-      keyAssigner = new DistributedDenseAssigner(smallDeltaRows = 100),
-      autoCheckpoint = false)
-    d.init(spark.range(0).select(col("id").as("key"), lit("").as("name")).limit(0))
-    d.ensure(spark.range(0, 3000)
-      .select(concat(lit("n"), format_string("%05d", col("id"))).as("name")))
-    val keys = d.current.orderBy("name").select("key").collect().map(_.getLong(0)).toSeq
-    assert(keys == (1L to 3000L), "keys must be dense global ranks with no duplicates/gaps")
   }
 
   test("checkpointed state: K scdensure batches keep a flat plan (no lineage growth)") {
@@ -524,25 +509,78 @@ class ScaleSpec extends SparkSpec {
     assert(again.queryExecution.analyzed eq frozen.queryExecution.analyzed)
     // ...and freezes anything else
     assert(bridge.knownCount(bridge.ensureFrozen(raw)).contains(100L))
+
+    // the count lives on the frozen leaf itself, as Catalyst statistics
+    // next to the bytes the freeze stored
+    val thousand = bridge.freeze(spark.range(0, 1000).select(col("id").as("k"), (col("id") % 7).as("v")))
+    val stats = thousand.queryExecution.optimizedPlan.stats
+    assert(stats.rowCount.contains(BigInt(1000)))
+    assert(stats.sizeInBytes > 0 && stats.sizeInBytes < BigInt(Long.MaxValue))
+    // self-join deduplication re-instances one leaf; both keep the count
+    val selfJoin = thousand.as("a").join(thousand.as("b"), col("a.k") === col("b.v"))
+    val leaves = selfJoin.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l
+    }
+    assert(leaves.map(_.output.head.exprId).distinct.size == 2)
+    assert(leaves.forall(_.computeStats().rowCount.contains(BigInt(1000))))
+    // so the size gate opens on a frozen frame, and stays shut one byte
+    // below the frame's size
+    val big = spark.range(0, 4000000).select(col("id").as("k"))
+    def broadcasts(side: org.apache.spark.sql.DataFrame) = withoutAutoBroadcast(
+      big.join(side, "k").queryExecution.sparkPlan.toString.contains("BroadcastHashJoin"))
+    assert(broadcasts(graft.core.Joins.maybeBroadcast(thousand)))
+    assert(!broadcasts(graft.core.Joins.maybeBroadcast(thousand, (stats.sizeInBytes - 1).toLong)))
+  }
+
+  test("SnowflakedDimension.lookupFullRow broadcasts every small frozen level") {
+    val nation = new Dimension("sfn", "n_key", Seq("n_name"), Seq("n_name"))
+    nation.init(spark.range(0).select(col("id").as("n_key"), lit("").as("n_name")).limit(0))
+    val cust = new Dimension("sfc", "c_key", Seq("c_name", "n_key"), Seq("c_name"))
+    cust.init(spark.range(0).select(col("id").as("c_key"), lit("").as("c_name"), col("id").as("n_key")).limit(0))
+    val flake = new SnowflakedDimension(Seq(cust -> Seq(nation)))
+    flake.ensure(spark.range(0, 200).select(
+      concat(lit("c"), col("id")).as("c_name"), concat(lit("n"), col("id") % 5).as("n_name")))
+    val keys = spark.range(0, 4000000).select((col("id") % 200 + 1).as("c_key"))
+    val plan = withoutAutoBroadcast(flake.lookupFullRow(keys).queryExecution.sparkPlan)
+    val joins = plan.collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j.nodeName }
+    assert(joins == Seq("BroadcastHashJoin", "BroadcastHashJoin"), plan.toString)
+  }
+
+  /** plan-shape checks of the explicit size gate: Spark's own automatic
+    * broadcast would otherwise broadcast a small side with or without it
+    */
+  private def withoutAutoBroadcast[T](body: => T): T = {
+    val k = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.getOption(k)
+    spark.conf.set(k, "-1")
+    try body finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
   }
 
   test("Scans.cumulative: known-count fast path (parts from data) is bit-identical (round 16)") {
     import graft.core.Scans
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
     val bridge = org.apache.spark.sql.graftbridge.Bridge
+    def rows(d: DataFrame) = d.select(col("k"), col("cum_a"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    // the part count the scan chose, read off the result plan
+    def parts(d: DataFrame) = d.queryExecution.analyzed
+      .collect { case r: RepartitionByExpression => r.numPartitions }.distinct
+    // reference: explicit multi-partition scan over the lazy frame
     val df = spark.range(0, 500)
       .select((col("id") * 37 % 1009).as("k"), (col("id") % 13).as("a"))
-    // reference: explicit multi-partition scan over the lazy frame
-    def rows(d: org.apache.spark.sql.DataFrame) = d.select(col("k"), col("cum_a"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     val ref = rows(Scans.cumulative(df, "k", Seq("a"), numPartitions = 5))
     // a frozen input rides the known-count fast path: 500 rows < one
-    // rowsPerPartition quantum → parts = 1, no quantile probe — results
-    // must be bit-identical (associative integral sums)
-    val frozen = bridge.freeze(df)
-    assert(rows(Scans.cumulative(frozen, "k", Seq("a"))) == ref)
-    // a large-count frozen frame still fans out: force tiny quanta
-    spark.conf.set("spark.graft.scan.rowsPerPartition", "100")
-    try assert(rows(Scans.cumulative(frozen, "k", Seq("a"))) == ref)
-    finally spark.conf.unset("spark.graft.scan.rowsPerPartition")
+    // 262,144-row quantum → parts = 1, no quantile probe — results must be
+    // bit-identical (associative integral sums)
+    val small = Scans.cumulative(bridge.freeze(df), "k", Seq("a"))
+    assert(parts(small) == Seq(1))
+    assert(rows(small) == ref)
+    // two quanta and one row fan out to 3 parts
+    val big = spark.range(0, 2 * 262144 + 1).select(col("id").as("k"), (col("id") % 13).as("a"))
+    val bigRef = rows(Scans.cumulative(big, "k", Seq("a"), numPartitions = 5))
+    val fanned = Scans.cumulative(bridge.freeze(big), "k", Seq("a"))
+    assert(parts(fanned) == Seq(3))
+    assert(rows(fanned) == bigRef)
   }
 }

@@ -1,9 +1,11 @@
 #!/bin/bash
-# Local replica of the driver's correctness gate:
+# Correctness gate, run from any checkout of this repository:
 #   1. compile + run graft.Verify at sf0.01 -> /tmp/verify_out
 #   2. run tools/check.py (DuckDB oracle compare)
+# usage: tools/verify.sh [SF_DIR] [OUT_DIR] [q1,q2,...]
+# Two checkouts' OUT_DIR/verify_summary.jsonl compare with tools/hashdiff.py.
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 rm -rf "$OUT"
