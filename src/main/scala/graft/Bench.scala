@@ -52,6 +52,12 @@ import scala.jdk.CollectionConverters._
   * run was taken under load (round-13: official dedup_minhash_eval read
   * 109.7 s vs 5.95 s committed same-day with no way to tell why).
   *
+  * RAW SAMPLES: the `queries` map (the table of record) holds each query's
+  * phase-1 slice sample, or its solo-audit time for the heavy tail. When a
+  * slice ran under a load spike (its canary read ≥3× the run's min), the
+  * gate re-times it once if the clock allows and records those samples in
+  * their own `retimed` section; they never replace a slice sample.
+  *
   * The whole gate runs against a wall-clock budget
   * (SPARK_GRAFT_BENCH_BUDGET_S, default 2700). `truncated:true` now means
   * evidence is actually MISSING (a query has no timing at all, or the sf1
@@ -235,39 +241,15 @@ object Bench {
       }
   }
 
-  /** Per-leg Spark-measured metrics (round-16: the official r15 artifact
-    * could not distinguish "ambient spike landed inside the leg" from "a
-    * real intermittent plan/memory cliff" for dedup_containment's 9.0×
-    * outlier). Task-time sum is wall-clock-noise-free: under a uniform
-    * external-load storm, wall inflates while summed task time stays ~flat
-    * (tasks wait for cores, they don't run longer); a genuine plan cliff
-    * (AQE flip, spill) inflates task time and spill bytes themselves.
+  /** a pair leg's executor work, as its `__met:<leg>:<key>` entries
+    * ([[graft.tools.QueryMetrics]]; round-16: the r15 artifact could not
+    * tell an ambient spike inside a leg from a real plan cliff)
     */
-  private class LegMetricsListener extends org.apache.spark.scheduler.SparkListener {
-    private val taskMs = new java.util.concurrent.atomic.AtomicLong
-    private val gcMs = new java.util.concurrent.atomic.AtomicLong
-    private val spillB = new java.util.concurrent.atomic.AtomicLong
-    private val shufB = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        taskMs.addAndGet(m.executorRunTime)
-        gcMs.addAndGet(m.jvmGCTime)
-        spillB.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        shufB.addAndGet(m.shuffleReadMetrics.totalBytesRead +
-          m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    /** (taskSec, gcSec, spillMB, shufMB) since the last snapshot. Called
-      * after releaseTransients' GC+settle window, which doubles as drain
-      * time for the async listener bus.
-      */
-    def snapshotAndReset(): Seq[(String, Double)] = {
-      def mb(b: Long): Double = math.round(b / 1048576.0 * 10) / 10.0
-      def s(ms: Long): Double = math.round(ms / 100.0) / 10.0
-      Seq("taskSec" -> s(taskMs.getAndSet(0)), "gcSec" -> s(gcMs.getAndSet(0)),
-        "spillMB" -> mb(spillB.getAndSet(0)), "shufMB" -> mb(shufB.getAndSet(0)))
-    }
+  private def legMetrics(c: graft.tools.QueryMetrics.Counts): Seq[(String, Double)] = {
+    def mb(b: Long): Double = math.round(b / 1048576.0 * 10) / 10.0
+    def s(ms: Long): Double = math.round(ms / 100.0) / 10.0
+    Seq("taskSec" -> s(c.taskMs), "gcSec" -> s(c.gcMs),
+      "spillMB" -> mb(c.spillBytes), "shufMB" -> mb(c.shuffleBytes))
   }
 
   // ----------------------------------------------------------------- fork
@@ -302,10 +284,7 @@ object Bench {
 
   /** Parses the flat numeric map a slice child writes: {"name":sec,...} */
   private def parseSlice(path: java.nio.file.Path): Seq[(String, Double)] =
-    parseSlice0(java.nio.file.Files.readString(path))
-
-  private def parseSlice0(txt: String): Seq[(String, Double)] =
-    """"([^"]+)":([-0-9.eE]+)""".r.findAllMatchIn(txt)
+    """"([^"]+)":([-0-9.eE]+)""".r.findAllMatchIn(java.nio.file.Files.readString(path))
       .map(m => m.group(1) -> m.group(2).toDouble).toSeq
 
   private def toJsonMap(results: Seq[(String, Double)]): String =
@@ -431,7 +410,7 @@ object Bench {
     // per-leg in the artifact instead of contaminating the ratio silently.
     case "--pair" :: out :: baseDir :: sf1Dir :: names =>
       val spark = session()
-      val metrics = new LegMetricsListener
+      val metrics = new graft.tools.QueryMetrics
       spark.sparkContext.addSparkListener(metrics)
       warmUp(spark)
       val c0 = timeCanary(spark)
@@ -459,11 +438,13 @@ object Bench {
         if (legWorkerWedged) return -1.0
         val cap = baseCap.map(_ * ambient)
         var v = timeLegCapped(spark, dir, name, cap)
-        mets ++= metrics.snapshotAndReset().map { case (k, x) => s"__met:$leg:$k" -> x }
+        // read after releaseTransients' GC+settle window, which doubles
+        // as drain time for the async listener bus
+        mets ++= legMetrics(metrics.snapshotAndReset()).map { case (k, x) => s"__met:$leg:$k" -> x }
         if (v == -1.0 && !legWorkerWedged) {
           System.err.println(s"[bench] leg $leg aborted at ambient-scaled cap; retrying once at 2x")
           v = timeLegCapped(spark, dir, name, cap.map(_ * 2))
-          mets ++= metrics.snapshotAndReset().map { case (k, x) => s"__met:$leg:${k}Retry" -> x }
+          mets ++= legMetrics(metrics.snapshotAndReset()).map { case (k, x) => s"__met:$leg:${k}Retry" -> x }
           if (v >= 0) retried += (s"__retry:$leg" -> v)
         }
         v
@@ -490,52 +471,6 @@ object Bench {
         toJsonMap(pairs ++ retried.result() ++ mets.result() ++
           canaryEntries("__canary" -> c0, "__canary_end" -> c1)))
       spark.stop()
-
-    // supplementary re-time, merged into an EXISTING artifact: re-times the
-    // named queries in one fresh slice child and rewrites the artifact so
-    // its `retimed` section carries the raw re-times and its `queries` map
-    // takes the min — the committed table stays self-contained instead of
-    // being corrected in SCALECHECK prose (round-15 judge directive).
-    case "--merge-retime" :: artifact :: names if names.nonEmpty =>
-      val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-      val path = java.nio.file.Paths.get(artifact)
-      require(java.nio.file.Files.exists(path), s"no artifact at $artifact")
-      val out = java.nio.file.Files.createTempFile("graft_bench_retime", ".json")
-      val code = fork(Seq("--slice", out.toString) ++ names,
-        Map("SPARK_GRAFT_SF_DIR" -> sfDir,
-            "SPARK_GRAFT_BENCH_SETTLE_MS" -> "60"))
-      require(code == 0, s"retime child exited $code")
-      val fresh = parseSlice(out).filterNot(_._1.startsWith("__")).toMap
-      java.nio.file.Files.deleteIfExists(out)
-      var txt = java.nio.file.Files.readString(path)
-      // merge with any prior retimed section (flat numeric map)
-      val prior = """"retimed":\{([^}]*)\}""".r.findFirstMatchIn(txt)
-        .map(m => parseSlice0(m.group(1))).getOrElse(Nil).toMap
-      val merged = (prior ++ fresh).toSeq.sortBy(_._1)
-      txt = ""","retimed":\{[^}]*\}""".r.replaceAllIn(txt, "")
-      // update each query's main-map value to min(old, retime); the main
-      // queries map is the FIRST "name":<num> occurrence in the artifact
-      var totalDelta = 0.0
-      fresh.foreach { case (n, v) =>
-        val re = ("\"" + java.util.regex.Pattern.quote(n) + "\":(-?[0-9.eE]+)").r
-        re.findFirstMatchIn(txt).foreach { m =>
-          val old = m.group(1).toDouble
-          if (v < old) {
-            totalDelta += v - old
-            txt = txt.substring(0, m.start) + s""""$n":$v""" + txt.substring(m.end)
-          }
-        }
-      }
-      val reTotal = """"value":(-?[0-9.eE]+)""".r
-      reTotal.findFirstMatchIn(txt).foreach { m =>
-        val nt = math.round((m.group(1).toDouble + totalDelta) * 1000) / 1000.0
-        txt = txt.substring(0, m.start) + s""""value":$nt""" + txt.substring(m.end)
-      }
-      val ins = s""","retimed":${toJsonMap(merged)}}"""
-      txt = txt.trim.stripSuffix("}") + ins + "\n"
-      java.nio.file.Files.writeString(path, txt)
-      println(s"""{"metric":"retimeMerged","artifact":"$artifact",""" +
-        s""""queries":${toJsonMap(fresh.toSeq.sortBy(_._1))}}""")
 
     // child: synthesize the 10x dataset
     case "--gen-sf1" :: sfDir :: outDir :: Nil =>
@@ -664,10 +599,10 @@ object Bench {
       // run's min (and ≥2 s absolute) was measured under a load spike —
       // its members' numbers are environmental, not plan evidence. If the
       // clock allows (still ahead of the soft deadline), re-fork the worst
-      // ≤2 such slices once; the artifact records raw re-times under
-      // `retimed` and the main map takes the min, so the table of record
-      // is self-contained (round-15: corrections lived only in SCALECHECK
-      // prose).
+      // ≤2 such slices once and record the raw re-times in their own
+      // `retimed` section. The table of record keeps the raw slice
+      // samples: a min over re-times biases it low against a
+      // single-sample table.
       val retimed: Seq[(String, Double)] = {
         val cs = canarySamples.result()
         val floor = if (cs.isEmpty) 1.0 else cs.min
@@ -684,18 +619,14 @@ object Bench {
       }
       val retimedJson = if (retimed.isEmpty) ""
         else s""","retimed":${toJsonMap(retimed.sortBy(_._1))}"""
-      val retimedMin = retimed.toMap
-      val phase1R = phase1.map { case (q, t) =>
-        q -> retimedMin.get(q).map(math.min(t, _)).getOrElse(t)
-      }
 
       // ---- phase 2: sf1 pairs FIRST (round-13: this section is the
       // 100×-scale evidence and must not queue behind the solo audit)
       val sf1Json = if (sys.env.getOrElse("SPARK_GRAFT_BENCH_SF1", "1") == "0") ""
-        else runSf1Section(phase1R, sfDir, deadline = budgetSec * 0.90)
+        else runSf1Section(phase1, sfDir, deadline = budgetSec * 0.90)
 
       // ---- phase 3: solo audit on whatever clock remains
-      val (results, soloJson) = runSoloAudit(phase1R, sfDir,
+      val (results, soloJson) = runSoloAudit(phase1, sfDir,
         forked = layout.nonEmpty, deadline = budgetSec * 0.985)
 
       val untimedJson = if (untimed.isEmpty) ""

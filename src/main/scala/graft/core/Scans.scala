@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.functions._
 
 /** Distributed prefix scans.
@@ -104,16 +105,18 @@ object Scans {
     // windowed body, and through it the final join) — every reference
     // re-ran whatever aggregation built it, and the duplicated subtree
     // ballooned readout plans (stream_hazard read 225 physical nodes,
-    // plans/r16). ensureFrozenCounted is a no-op for already-frozen
-    // inputs (monitor states, pre-frozen count tables), so callers that
-    // freeze first pay nothing extra. With the count in hand the scan is
+    // plans/r16). ensureFrozen is a no-op for already-frozen inputs
+    // (monitor states, pre-frozen count tables), so callers that freeze
+    // first pay nothing extra, and the count is read off the frozen leaf
+    // (knownCount, no job). With the count in hand the scan is
     // scale-ADAPTIVE: a few-hundred-row life/count table takes parts=1 —
     // no approxQuantile pass, no range machinery, one tiny partitioned
     // window — while a genuinely large frozen frame still fans out
     // ([[RowsPerPartition]] rows per task, capped at the session's
     // shuffle parallelism). Result-identical for ANY parts (associative
     // integral/decimal sums, see above).
-    val (f, n) = org.apache.spark.sql.graftbridge.Bridge.ensureFrozenCounted(df)
+    val f = Bridge.ensureFrozen(df)
+    val n = Bridge.knownCount(f).get
     val parts =
       if (numPartitions > 0) numPartitions
       else {

@@ -68,20 +68,26 @@ object Streaming {
     * the state, so concurrent readers of one shared monitor are safe;
     * [[settle]] drains without reading.
     *
-    * Restore and save: a restored run stays a LAZY scan of the checkpoint
-    * files. Freezing on restore would hold a copy of every restored state
-    * in executor memory whether or not anything reads it. The one path
-    * that overwrites checkpoint files is a save, so [[forSave]] freezes
-    * any run that still reads them before it hands the state out; a later
-    * `add` folds the scan into a frozen run anyway.
+    * Restore and save: a run's size is the row count on its frozen leaf
+    * ([[Bridge.knownCount]]), so a run is just a `DataFrame`. A frame that
+    * already IS a frozen leaf ([[Bridge.isFrozen]]) becomes a run without a
+    * second freeze; a projection or filter over one is frozen again, so a
+    * run never pins the batch it was cut from. A restored run stays a LAZY
+    * scan of the checkpoint files, the one kind of run with no count: it
+    * ranks largest and merges last ([[DeltaState.Unsized]]). Freezing on
+    * restore would hold a copy of every restored state in executor memory
+    * whether or not anything reads it. The one path that overwrites
+    * checkpoint files is a save, so [[forSave]] freezes every run without a
+    * count before it hands the state out; a later `add` folds the scan into
+    * a frozen run anyway.
     */
   private[streaming] final class DeltaState(combine: DataFrame => DataFrame,
                                             maxDeltas: Int) {
-    import DeltaState.{Async, Run}
+    import DeltaState.{Async, Unsized}
     require(maxDeltas >= 1, "maxDeltas must be positive")
-    // newest first; each run carries its materialized row count (free at
-    // freeze time) — the size-tiered compaction is driven by run sizes
-    private var deltas: List[Run] = Nil
+    // newest first; the size-tiered compaction reads each run's size off
+    // its frozen leaf
+    private var deltas: List[DataFrame] = Nil
     // freezes in flight, oldest first — folded in ADD ORDER at drain, so
     // the state's union order stays deterministic no matter which helper
     // finishes first
@@ -101,32 +107,16 @@ object Streaming {
         val settled = deltas.headOption
         enqueue(() => prior.map(_.await()).orElse(settled) match {
           case None => batchAgg
-          case Some(run) => combine(run.df.unionByName(batchAgg))
+          case Some(run) => combine(run.unionByName(batchAgg))
         })
       }
     }
 
-    /** swap in `next` as the whole state (one-run shape), frozen like an
-      * [[add]]
-      */
+    /** swap in `next` as the whole state, frozen like an [[add]] */
     def replace(next: DataFrame): Unit = synchronized {
-      require(maxDeltas == 1, "replace needs the one-run shape")
+      drain()
+      deltas = Nil
       enqueue(() => next)
-    }
-
-    /** like [[add]] for a frame the caller ALREADY froze and counted
-      * (freezeCounted) — skips the second, redundant checkpoint copy
-      */
-    def addFrozen(frozenDelta: DataFrame, rows: Long): Unit = synchronized {
-      require(maxDeltas > 1, "addFrozen needs the LSM shape")
-      drain()
-      fold(Run(frozenDelta, rows))
-    }
-
-    /** make one already-frozen frame the whole state */
-    def replaceFrozen(frozen: DataFrame, rows: Long): Unit = synchronized {
-      drain()
-      deltas = Run(frozen, rows) :: Nil
     }
 
     private def enqueue(plan: () => DataFrame): Unit = {
@@ -144,7 +134,7 @@ object Streaming {
       */
     def settle(): Unit = synchronized(drain())
 
-    private def fold(run: Run): Unit =
+    private def fold(run: DataFrame): Unit =
       if (maxDeltas == 1) deltas = run :: Nil // the run already holds its predecessor
       else {
         deltas = run :: deltas
@@ -152,17 +142,16 @@ object Streaming {
         // (adjacency keeps the deterministic union order; the combine
         // itself is order-insensitive)
         while (deltas.sizeIs > maxDeltas) {
-          val (pre, rest) = deltas.splitAt(DeltaState.mergeAt(deltas.map(_.rows)))
-          val (df, n) =
-            Bridge.freezeCounted(combine(rest.head.df.unionByName(rest(1).df)))
-          deltas = pre ::: Run(df, n) :: rest.drop(2)
+          val sizes = deltas.map(Bridge.knownCount(_).getOrElse(Unsized))
+          val (pre, rest) = deltas.splitAt(DeltaState.mergeAt(sizes))
+          deltas = pre ::: Bridge.freeze(combine(rest.head.unionByName(rest(1)))) :: rest.drop(2)
         }
       }
 
     private def view: Option[DataFrame] = deltas match {
       case Nil => None
-      case one :: Nil => Some(one.df)
-      case many => Some(combine(many.map(_.df).reduce(_ unionByName _)))
+      case one :: Nil => Some(one)
+      case many => Some(combine(many.reduce(_ unionByName _)))
     }
 
     /** the unique-key state view (aggregates the pending deltas) */
@@ -176,27 +165,21 @@ object Streaming {
       */
     def restore(frame: Option[DataFrame]): Unit = synchronized {
       drain()
-      deltas = frame.map(Run(_, DeltaState.Unsized, restored = true)).toList
+      deltas = frame.toList
     }
 
     /** the state as a single frame for checkpointing (None when empty);
-      * first freezes any run that still scans checkpoint files, because
-      * the save may overwrite them
+      * first freezes every run without a count — the runs that still scan
+      * checkpoint files, which the save may overwrite
       */
     def forSave: Option[DataFrame] = synchronized {
       drain()
-      deltas = deltas.map { r =>
-        if (!r.restored) r
-        else { val (df, n) = Bridge.freezeCounted(r.df); Run(df, n) }
-      }
+      deltas = deltas.map(r => if (Bridge.knownCount(r).isDefined) r else Bridge.freeze(r))
       view
     }
   }
 
   private[streaming] object DeltaState {
-    /** a frozen run and its row count; a restored run is a lazy scan */
-    final case class Run(df: DataFrame, rows: Long, restored: Boolean = false)
-
     // a restored run's size is unknown without a job; it holds all the
     // history before its checkpoint, so it ranks as the largest run and
     // merges last
@@ -223,7 +206,8 @@ object Streaming {
       */
     private val gate = new java.util.concurrent.Semaphore(4)
 
-    /** one freeze job on its own thread. A fresh Thread (not a pool)
+    /** one freeze job on its own thread, or none when `plan` is already a
+      * frozen leaf. A fresh Thread (not a pool)
       * inherits the caller's SparkContext local properties — job group,
       * description — so cancellation and UI labels behave exactly as if
       * the caller ran the job itself. `plan` runs on the thread before it
@@ -231,21 +215,20 @@ object Streaming {
       * never holds one.
       */
     final class Async(plan: () => DataFrame) {
-      @volatile private var result: Either[Throwable, Run] = _
+      @volatile private var result: Either[Throwable, DataFrame] = _
       private val t = new Thread(() => {
         try {
           val df = plan()
-          gate.acquire()
-          try {
-            val (frozen, n) = Bridge.freezeCounted(df)
-            result = Right(Run(frozen, n))
-          } finally gate.release()
+          result = Right(if (Bridge.isFrozen(df)) df else {
+            gate.acquire()
+            try Bridge.freeze(df) finally gate.release()
+          })
         } catch { case e: Throwable => result = Left(e) }
       }, "graft-delta-freeze")
       t.setDaemon(true)
       t.start()
 
-      def await(): Run = {
+      def await(): DataFrame = {
         t.join()
         result match {
           case Right(r) => r
@@ -412,13 +395,13 @@ object Streaming {
         .filter(col("token") =!= "")
         .groupBy(col("token")).agg(count(lit(1)).as("c_ref")))
     private val running = state("running")
-    running.replaceFrozen(spark0.createDataFrame(
+    running.restore(Some(spark0.createDataFrame(
       spark0.sparkContext.emptyRDD[Row],
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("token",
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("c_run",
-          org.apache.spark.sql.types.LongType)))), 0L)
+          org.apache.spark.sql.types.LongType))))))
 
     /** merge one micro-batch's tokens into the running distribution */
     def update(batch: DataFrame): Unit = {
@@ -2041,15 +2024,14 @@ object Streaming {
       * re-writes O(corpus) state — per-batch work is batch-proportional.
       */
     def update(batch: DataFrame): Unit = {
-      val (b, nb) = Bridge.freezeCounted(batch.select(col(idCol), col(textCol)))
-      val (bIdx, ni) = Bridge.freezeCounted(
-        Dedup.minhashIndex(b, idCol, textCol, n, k, bands))
+      val b = Bridge.freeze(batch.select(col(idCol), col(textCol)))
+      val bIdx = Bridge.freeze(Dedup.minhashIndex(b, idCol, textCol, n, k, bands))
       if (corpus.isEmpty) found.add(emptyMatches(batch))
       else found.add(Dedup.minhashAgainstIndex(corpus.merged, b, idCol, textCol,
         n, k, bands, threshold, maxBucket,
         index = Some(index.merged), incomingIndex = Some(bIdx)))
-      corpus.addFrozen(b, nb)
-      index.addFrozen(bIdx, ni)
+      corpus.add(b)
+      index.add(bIdx)
     }
 
     /** all (new_id, match_id, jaccard) pairs found so far, where match_id
@@ -2105,7 +2087,7 @@ object Streaming {
       val (c, n) = Bridge.freezeCounted(t
         .select(col("cluster").as("__centid"), col("centroid").as("__centv"))
         .withColumn("__centn", sqrt(Vectors.dot(col("__centv"), col("__centv")))))
-      centroids.replaceFrozen(c, n); nCent = n
+      centroids.replace(c); nCent = n
     }
     // index size at the last compaction — the amortization anchor: once
     // √n outgrows maxMeanList the bar alone would trip on EVERY batch
@@ -2131,13 +2113,13 @@ object Streaming {
           .select(col(idCol).as("__centid"),
             col(vecCol).cast("array<double>").as("__centv"))
           .withColumn("__centn", sqrt(Vectors.dot(col("__centv"), col("__centv")))))
-        centroids.replaceFrozen(c, n); nCent = n
+        centroids.replace(c); nCent = n
       }
       // freeze + count ONLY the batch's routed delta (batch-proportional);
       // the accreted index is the delta union, never rewritten here
       val (routed, nB) = Bridge.freezeCounted(
         Vectors.routeToCentroids(batch, idCol, vecCol, centroids.merged))
-      index.addFrozen(routed, nB); nIndexed += nB
+      index.add(routed); nIndexed += nB
       if (maxMeanList > 0 && nIndexed > nCent * maxMeanList &&
         nIndexed >= 2L * math.max(lastCompactN, 1L)) compact()
     }
@@ -2185,10 +2167,9 @@ object Streaming {
         .withColumn("__centn", sqrt(Vectors.dot(col("__centv"), col("__centv")))))
       val rerouted = Vectors.routeToCentroids(
         idx.select(col("__cid"), col("__cv")), "__cid", "__cv", c2)
-      centroids.replaceFrozen(c2, n2); nCent = n2
+      centroids.replace(c2); nCent = n2
       // the re-route rewrites everything anyway: reset the LSM to one delta
-      val (r, nr) = Bridge.freezeCounted(rerouted)
-      index.replaceFrozen(r, nr)
+      index.replace(rerouted)
     }
 
     /** exact-cosine top-k of each query over its probed clusters of the

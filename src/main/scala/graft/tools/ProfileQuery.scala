@@ -1,11 +1,11 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerJobEnd, SparkListenerTaskEnd, SparkListenerStageCompleted}
 
 /** Measurement-only harness (guide §1): times each named gate query with a
-  * job/stage/task breakdown so "many tiny driver-side jobs" and "one heavy
-  * stage" are distinguishable — the bench artifact only records wall.
+  * job/stage/task breakdown ([[QueryMetrics]]) so "many tiny driver-side
+  * jobs" and "one heavy stage" are distinguishable — the bench artifact only
+  * records wall.
   *
   *   java -cp ... graft.tools.ProfileQuery SF_DIR name1 name2 ...
   *
@@ -29,43 +29,8 @@ object ProfileQuery {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val perJob = sys.env.get("PROFILE_JOBS").contains("1")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val stages = new java.util.concurrent.atomic.AtomicInteger
-    val tasks = new java.util.concurrent.atomic.AtomicInteger
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
-    val gcMs = new java.util.concurrent.atomic.AtomicLong
-    val shufB = new java.util.concurrent.atomic.AtomicLong
-    val jobStartNs = scala.collection.concurrent.TrieMap.empty[Int, (Long, String)]
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        jobStartNs.put(js.jobId,
-          (System.nanoTime(), Option(js.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .orElse(Option(js.properties)
-              .flatMap(p => Option(p.getProperty("callSite.short"))))
-            .getOrElse("")))
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        jobStartNs.remove(je.jobId).foreach { case (t0, desc) =>
-          if (perJob)
-            println(f"    job ${je.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%7.3fs  $desc")
-        }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        stages.incrementAndGet()
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet()
-        val m = te.taskMetrics
-        if (m != null) {
-          taskMs.addAndGet(m.executorRunTime)
-          gcMs.addAndGet(m.jvmGCTime)
-          shufB.addAndGet(m.shuffleReadMetrics.totalBytesRead +
-            m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val metrics = new QueryMetrics(perJob = sys.env.get("PROFILE_JOBS").contains("1"))
+    spark.sparkContext.addSparkListener(metrics)
 
     // same warmup as Bench so the first timed query is JIT-comparable;
     // dataset overridable off this machine (ADVICE r16: a hardcoded path
@@ -80,15 +45,13 @@ object ProfileQuery {
         System.err.println(s"[profile] warmup $q failed (timings may be cold): $e") }
     }
     Thread.sleep(500)
-    def reset(): Unit = { jobs.set(0); stages.set(0); tasks.set(0)
-      taskMs.set(0); gcMs.set(0); shufB.set(0) }
 
     names.foreach { name =>
       val keep = graft.SparkEntry.pinnedReplayRddIds
       spark.sparkContext.getPersistentRDDs.values
         .filterNot(r => keep.contains(r.id)).foreach(_.unpersist(blocking = false))
       System.gc(); Thread.sleep(250)
-      reset()
+      metrics.snapshotAndReset() // drop the warm-up's and the previous query's stragglers
       spark.sparkContext.setJobDescription(name)
       val t0 = System.nanoTime()
       try graft.SparkEntry.queries(name)(spark, sfDir)
@@ -97,9 +60,10 @@ object ProfileQuery {
         println(s"  $name FAILED: ${e.getMessage}") }
       val wall = (System.nanoTime() - t0) / 1e9
       Thread.sleep(300) // drain listener bus
-      println(f"$name%-28s wall=$wall%7.3fs jobs=${jobs.get}%3d stages=${stages.get}%4d " +
-        f"tasks=${tasks.get}%5d taskSec=${taskMs.get / 1000.0}%8.2f gcSec=${gcMs.get / 1000.0}%6.2f " +
-        f"shufMB=${shufB.get / 1048576.0}%8.1f")
+      val c = metrics.snapshotAndReset()
+      println(f"$name%-28s wall=$wall%7.3fs jobs=${c.jobs}%3d stages=${c.stages}%4d " +
+        f"tasks=${c.tasks}%5d taskSec=${c.taskMs / 1000.0}%8.2f gcSec=${c.gcMs / 1000.0}%6.2f " +
+        f"shufMB=${c.shuffleBytes / 1048576.0}%8.1f")
     }
     spark.stop()
   }

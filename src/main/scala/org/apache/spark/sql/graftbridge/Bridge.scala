@@ -12,7 +12,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   * org.apache.spark.sql namespace to re-expose the conversions custom
   * Catalyst expressions need, and to build the frozen leaf
   * ([[freezeCounted]]): a `LogicalRDD` over checkpointed blocks that carries
-  * its own statistics, which only this namespace can construct.
+  * its own statistics, which only this namespace can construct. Because
+  * only this object builds that leaf, only it tests for one: a frozen
+  * frame's row count lives on its leaf ([[knownCount]]), and no holder of a
+  * frozen frame keeps a second copy of it. [[isFrozen]] tells a frame that
+  * IS the leaf from one that merely reads it.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -70,28 +74,31 @@ object Bridge {
     * stays valid for partition sizing. Lets downstream operators size their
     * partitioning from the REAL input instead of a config constant.
     */
-  def knownCount(df: DataFrame): Option[Long] = {
-    @annotation.tailrec
-    def leaf(p: LogicalPlan): Option[Long] = p match {
-      case l: LogicalRDD => l.computeStats().rowCount.map(_.toLong)
-      case pr: Project => leaf(pr.child)
-      case f: Filter => leaf(f.child)
-      case a: SubqueryAlias => leaf(a.child)
-      case _ => None
-    }
-    leaf(df.queryExecution.analyzed)
+  def knownCount(df: DataFrame): Option[Long] = leafCount(df.queryExecution.analyzed, rowOps = true)
+
+  /** true iff `df` IS a frame [[freezeCounted]] built: its plan is the
+    * counted leaf itself, at most under a `SubqueryAlias`. Unlike
+    * [[knownCount]], a projection or filter over the leaf does not count —
+    * such a frame still reads (and pins) the whole frozen input, so a holder
+    * that keeps it should freeze it again.
+    */
+  def isFrozen(df: DataFrame): Boolean = leafCount(df.queryExecution.analyzed, rowOps = false).isDefined
+
+  @annotation.tailrec
+  private def leafCount(p: LogicalPlan, rowOps: Boolean): Option[Long] = p match {
+    case l: LogicalRDD => l.computeStats().rowCount.map(_.toLong)
+    case a: SubqueryAlias => leafCount(a.child, rowOps)
+    case pr: Project if rowOps => leafCount(pr.child, rowOps)
+    case f: Filter if rowOps => leafCount(f.child, rowOps)
+    case _ => None
   }
 
-  /** [[freezeCounted]] unless `df` already IS a frozen frame (modulo
-    * projections) — avoids re-checkpointing a frame a caller or a monitor
-    * state froze moments ago (one redundant materialization job per call
-    * otherwise).
+  /** `df` itself if it already is a frozen frame (modulo row-local
+    * wrappers, see [[knownCount]]), else its [[freeze]] — avoids
+    * re-checkpointing a frame a caller or a monitor state froze moments ago
+    * (one redundant materialization job per call otherwise). Either way
+    * [[knownCount]] of the result is defined.
     */
-  def ensureFrozenCounted(df: DataFrame): (DataFrame, Long) =
-    knownCount(df) match {
-      case Some(n) => (df, n)
-      case None => freezeCounted(df)
-    }
-
-  def ensureFrozen(df: DataFrame): DataFrame = ensureFrozenCounted(df)._1
+  def ensureFrozen(df: DataFrame): DataFrame =
+    if (knownCount(df).isDefined) df else freeze(df)
 }
