@@ -220,37 +220,14 @@ final class EtlSession(val spark: SparkSession) {
 
   def register(t: graft.tables.ManagedTable): Unit = registry(t.name) = t
 
-  /** Dependency-ordered atomic publish (copy-on-write, SURVEY §7.3):
-    * dimensions write before facts, respecting `dependson` (reference:
-    * tables.py:2651-2652 flush ordering). Every table writes a NEW version
-    * directory (`<name>/v=<n>`), and only after all writes succeed does the
-    * `_CURRENT` pointer file swap — readers mid-commit keep seeing the
-    * previous version, and a failed commit leaves the published state
-    * untouched. The pointer is written through the Hadoop FileSystem resolved
-    * from `baseDir`'s scheme + the session's Hadoop conf, so file://, hdfs://
-    * and object-store URIs all work from any node; the overwrite-rename is
-    * atomic on HDFS/POSIX, and degrades to copy+delete (a tiny
-    * single-object window) on stores without atomic rename. Returns the
-    * published version.
+  /** Dependency-ordered atomic publish ([[EtlSession.publish]]): dimensions
+    * write before facts, respecting `dependson` (reference:
+    * tables.py:2651-2652 flush ordering). A failed commit leaves the
+    * published version untouched; a commit keeps every older version.
+    * Returns the published version.
     */
-  def commit(baseDir: String): Long = {
-    val hconf = spark.sessionState.newHadoopConf()
-    val base = new org.apache.hadoop.fs.Path(baseDir)
-    val fs = base.getFileSystem(hconf)
-    fs.mkdirs(base)
-    val next = EtlSession.currentVersion(baseDir, hconf) + 1
-    val ordered = topoSort(registry.values.toSeq)
-    ordered.foreach(t => t.save(s"$baseDir/${t.name}/v=$next"))
-    val tmp = new org.apache.hadoop.fs.Path(base, s"_CURRENT.tmp.$next")
-    val out = fs.create(tmp, true)
-    try out.write(next.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // FileContext rename supports OVERWRITE (atomic where the FS can)
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(base.toUri, hconf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(new org.apache.hadoop.fs.Path(base, "_CURRENT")),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    next
-  }
+  def commit(baseDir: String): Long =
+    EtlSession.publish(spark, baseDir, topoSort(registry.values.toSeq).map(t => t.name -> (t.save _)))
 
   /** Open a committed table at the currently-published version. */
   def open(baseDir: String, name: String): DataFrame =
@@ -271,6 +248,51 @@ final class EtlSession(val spark: SparkSession) {
 }
 
 object EtlSession {
+  import org.apache.hadoop.fs.{FileContext, Options, Path}
+
+  /** The one publish protocol, for commits and monitor checkpoints alike
+    * (copy-on-write, SURVEY §7.3). With n the published version, each
+    * `(name, write)` writes `<baseDir>/<name>/v=<n+1>`, and only after every
+    * write succeeds does the `_CURRENT` pointer file swap to n+1: readers
+    * keep seeing version n until then, and a failed publish leaves it
+    * untouched. What a failed attempt left under n+1 is deleted first. All
+    * file access goes through the Hadoop FileSystem of `baseDir`'s scheme,
+    * so file://, hdfs:// and object-store URIs work from any node; the
+    * overwrite-rename is atomic on HDFS/POSIX and degrades to copy+delete on
+    * stores without atomic rename. Retention is the caller's. Returns n+1.
+    */
+  def publish(spark: SparkSession, baseDir: String, tables: Seq[(String, String => Unit)]): Long = {
+    val hconf = spark.sessionState.newHadoopConf()
+    val base = new Path(baseDir)
+    val fs = base.getFileSystem(hconf)
+    fs.mkdirs(base)
+    val next = currentVersion(baseDir, hconf) + 1
+    fs.globStatus(new Path(base, s"*/v=$next")).foreach(st => fs.delete(st.getPath, true))
+    tables.foreach { case (name, write) => write(s"$baseDir/$name/v=$next") }
+    val tmp = new Path(base, s"_CURRENT.tmp.$next")
+    val out = fs.create(tmp, true)
+    try out.write(next.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    // FileContext rename supports OVERWRITE (atomic where the FS can)
+    FileContext.getFileContext(base.toUri, hconf).rename(fs.makeQualified(tmp),
+      fs.makeQualified(new Path(base, "_CURRENT")), Options.Rename.OVERWRITE)
+    next
+  }
+
+  /** the tables of the version published under `baseDir`, whose pointer is
+    * read once: each name maps to its frame, or to None when that version
+    * holds no such table. Fails, naming `baseDir`, when nothing is published.
+    */
+  def published(spark: SparkSession, baseDir: String): String => Option[DataFrame] = {
+    val hconf = spark.sessionState.newHadoopConf()
+    val v = currentVersion(baseDir, hconf)
+    require(v > 0, s"no published version under $baseDir")
+    val fs = new Path(baseDir).getFileSystem(hconf)
+    name => {
+      val p = new Path(baseDir, s"$name/v=$v")
+      if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
+    }
+  }
 
   /** currently-published commit version under `baseDir` (0 if none), read
     * through the Hadoop FileSystem for the path's scheme
@@ -280,7 +302,7 @@ object EtlSession {
     val conf = Option(hconf)
       .orElse(SparkSession.getActiveSession.map(_.sessionState.newHadoopConf()))
       .getOrElse(new org.apache.hadoop.conf.Configuration())
-    val p = new org.apache.hadoop.fs.Path(baseDir, "_CURRENT")
+    val p = new Path(baseDir, "_CURRENT")
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) 0L
     else {
@@ -291,9 +313,7 @@ object EtlSession {
   }
 
   /** read a committed table at the published version */
-  def open(spark: SparkSession, baseDir: String, name: String): DataFrame = {
-    val v = currentVersion(baseDir, spark.sessionState.newHadoopConf())
-    require(v > 0, s"no committed version under $baseDir")
-    spark.read.parquet(s"$baseDir/$name/v=$v")
-  }
+  def open(spark: SparkSession, baseDir: String, name: String): DataFrame =
+    published(spark, baseDir)(name).getOrElse(
+      throw new IllegalArgumentException(s"no table $name in the version published under $baseDir"))
 }

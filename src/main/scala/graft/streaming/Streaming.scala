@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.core.EtlSession
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.functions._
@@ -76,10 +78,11 @@ object Streaming {
     * scan of the checkpoint files, the one kind of run with no count: it
     * ranks largest and merges last ([[DeltaState.Unsized]]). Freezing on
     * restore would hold a copy of every restored state in executor memory
-    * whether or not anything reads it. The one path that overwrites
-    * checkpoint files is a save, so [[forSave]] freezes every run without a
-    * count before it hands the state out; a later `add` folds the scan into
-    * a frozen run anyway.
+    * whether or not anything reads it. The one path that deletes checkpoint
+    * files is a save, which removes the previous version once the new one
+    * is published, so [[forSave]] freezes every run without a count before
+    * it hands the state out; a later `add` folds the scan into a frozen run
+    * anyway.
     */
   private[streaming] final class DeltaState(combine: DataFrame => DataFrame,
                                             maxDeltas: Int) {
@@ -250,44 +253,16 @@ object Streaming {
     }
   }
 
-  /** Monitor-state checkpointing — the crash-recovery half of the
-    * object-held-state monitors: the streaming source's own
-    * `checkpointLocation` decides WHICH micro-batches replay after a
-    * restart, and this persists the monitor's state tables so the restored
-    * object resumes from exactly the batches the source will not re-feed.
-    * The marker file is written LAST, so a kill mid-save leaves no marker
-    * and `restore` reports the checkpoint unusable instead of loading a
-    * torn state.
-    */
-  object MonitorState {
-    import java.nio.file.{Files, Paths}
-    private val Marker = "_STATE_OK"
-
-    def save(dir: String, tables: Seq[(String, Option[DataFrame])]): Unit = {
-      Files.createDirectories(Paths.get(dir))
-      Files.deleteIfExists(Paths.get(dir, Marker))
-      val present = tables.collect { case (n, Some(df)) => n -> df }
-      present.foreach { case (n, df) =>
-        df.write.mode("overwrite").parquet(s"$dir/$n")
-      }
-      Files.writeString(Paths.get(dir, Marker), present.map(_._1).mkString(","))
-    }
-
-    /** true iff `dir` holds a complete (marker-sealed) state checkpoint */
-    def isComplete(dir: String): Boolean = Files.exists(Paths.get(dir, Marker))
-
-    def load(spark: SparkSession, dir: String, name: String): Option[DataFrame] = {
-      require(isComplete(dir), s"no complete monitor state at $dir")
-      val names = Files.readString(Paths.get(dir, Marker)).split(",").toSet
-      if (names.contains(name)) Some(spark.read.parquet(s"$dir/$name")) else None
-    }
-  }
-
   /** The one monitor contract. A monitor declares each state table with
     * [[state]]; this trait checkpoints, restores and settles them all, so
-    * no monitor hand-writes its own. Call `saveState` after each `update`
-    * (a save into the directory a restore read from is safe: see
-    * [[DeltaState]]).
+    * no monitor hand-writes its own. Call `saveState` after each `update`:
+    * the streaming source's `checkpointLocation` decides which micro-batches
+    * replay after a restart, and the restored states resume from exactly
+    * the ones it will not re-feed. A save publishes the states as a new
+    * version the way a commit does ([[graft.core.EtlSession.publish]]), so a
+    * save that fails partway leaves the last checkpoint restorable, then
+    * deletes every older version (safe for the directory a restore read
+    * from: see [[DeltaState]]).
     */
   trait Monitor {
     private val states = scala.collection.mutable.ArrayBuffer.empty[(String, DeltaState)]
@@ -303,11 +278,26 @@ object Streaming {
 
     /** persist every state table for crash-restart (call after update) */
     def saveState(dir: String): Unit =
-      MonitorState.save(dir, states.toSeq.map { case (n, s) => n -> s.forSave })
+      publish(dir, states.toSeq.map { case (n, s) => n -> s.forSave })
+
+    /** publish the present `tables` as the next version under `dir`, then
+      * delete every older one
+      */
+    private[streaming] def publish(dir: String, tables: Seq[(String, Option[DataFrame])]): Unit = {
+      val spark = SparkSession.active
+      val v = EtlSession.publish(spark, dir, tables.collect { case (n, Some(df)) =>
+        n -> ((path: String) => df.write.mode("overwrite").parquet(path)) })
+      val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+      fs.globStatus(new Path(dir, "*/v=*")).filter(_.getPath.getName != s"v=$v")
+        .foreach(st => fs.delete(st.getPath, true))
+    }
 
     /** restore every state table from a [[saveState]] checkpoint */
     def restoreState(spark: SparkSession, dir: String): Unit =
-      states.foreach { case (n, s) => s.restore(MonitorState.load(spark, dir, n)) }
+      restore(EtlSession.published(spark, dir))
+
+    private[streaming] def restore(load: String => Option[DataFrame]): Unit =
+      states.foreach { case (n, s) => s.restore(load(n)) }
 
     /** wait for every state freeze still in flight */
     def settle(): Unit = states.foreach(_._2.settle())
@@ -2193,7 +2183,7 @@ object Streaming {
       */
     override def saveState(dir: String): Unit = {
       val ix = index.forSave
-      MonitorState.save(dir, Seq("index" -> ix, "centroids" -> centroids.forSave,
+      publish(dir, Seq("index" -> ix, "centroids" -> centroids.forSave,
         "meta" -> ix.map(_.sparkSession.range(1)
           .select(lit(lastCompactN).as("lastCompactN")))))
     }
@@ -2202,14 +2192,13 @@ object Streaming {
       * checkpoint
       */
     override def restoreState(spark: SparkSession, dir: String): Unit = {
-      super.restoreState(spark, dir)
+      val load = EtlSession.published(spark, dir)
+      restore(load)
       nIndexed = if (index.isEmpty) 0L else index.merged.count()
       nCent = if (centroids.isEmpty) 0L else centroids.merged.count()
-      lastCompactN = MonitorState.load(spark, dir, "meta")
+      lastCompactN = load("meta")
         .map(_.select(col("lastCompactN")).head().getLong(0))
-        // legacy checkpoint without meta: conservative 2×-restored anchor
-        // (correctness unaffected either way — [[seal]] fixes final state)
-        .getOrElse(nIndexed)
+        .getOrElse(0L) // no meta: the index was empty when saved
     }
   }
 

@@ -13,6 +13,29 @@ trait ManagedTable {
   def dependsOn: Seq[String] = Nil
   def current: DataFrame
   def save(path: String): Unit = current.write.mode("overwrite").parquet(path)
+
+  /** The reference raises KeyError when a row misses a required attribute
+    * (tables.py:403-407, 2184-2197); the set-oriented analogue is
+    * analysis-time schema validation with a message naming the table and the
+    * missing columns.
+    */
+  protected def requireColumns(df: DataFrame, cols: Seq[String], op: String): Unit = {
+    val missing = cols.filterNot(df.columns.contains)
+    require(missing.isEmpty,
+      s"$name.$op: input is missing required column(s) ${missing.mkString(", ")} " +
+        s"(has: ${df.columns.mkString(", ")})")
+  }
+
+  /** Materialize a mutation product, truncating lineage: without it, K
+    * sequential mutations would stack K plan layers and every downstream
+    * action would re-execute the whole history — O(K²), the steady state of
+    * a streaming foreachBatch merge. Eager on purpose: a lazy checkpoint
+    * lets several downstream plan branches race to materialize the same
+    * blocks and duplicates the work (measured 1.4× slower across the
+    * table-query suite at sf0.1).
+    */
+  protected def materialize(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graftbridge.Bridge.freeze(df)
 }
 
 /** Dimension table: surrogate `key`, non-key `attributes`, `lookupatts`
@@ -73,29 +96,10 @@ class Dimension(
     this
   }
 
-  /** The reference raises KeyError when a row misses a required attribute
-    * (tables.py:403-407); the set-oriented analogue is analysis-time schema
-    * validation with a message naming the table and the missing columns.
-    */
-  protected def requireColumns(df: DataFrame, cols: Seq[String], op: String): Unit = {
-    val missing = cols.filterNot(df.columns.contains)
-    require(missing.isEmpty,
-      s"$name.$op: input is missing required column(s) ${missing.mkString(", ")} " +
-        s"(has: ${df.columns.mkString(", ")})")
-  }
-
   def initEmpty(spark: SparkSession, schemaFrom: DataFrame): this.type =
     init(schemaFrom.select(allColumns.map(col): _*).limit(0))
 
   def current: DataFrame = state
-
-  /** Materialize a mutation product, truncating lineage. Eager on purpose:
-    * a lazy checkpoint lets several downstream plan branches race to
-    * materialize the same blocks and duplicates the work (measured 1.4×
-    * slower across the table-query suite at sf0.1).
-    */
-  protected def materialize(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftbridge.Bridge.freeze(df)
 
   protected def dimForJoin: DataFrame = graft.core.Joins.maybeBroadcast(state)
 

@@ -21,15 +21,6 @@ class FactTable(
   protected var state: DataFrame = _
   def allColumns: Seq[String] = keyrefs ++ measures
 
-  /** Freeze a mutation product, truncating lineage. Same contract as
-    * [[Dimension.materialize]]: without it, K sequential insert/ensure/merge
-    * batches would stack K plan layers and every downstream action would
-    * re-execute the whole history — O(K²), the steady state of a streaming
-    * foreachBatch merge onto an accumulating fact.
-    */
-  protected def materialize(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftbridge.Bridge.freeze(df)
-
   /** Append a delta as a materialized leaf: state stays a flat union of
     * checkpointed blocks, never a recompute lineage.
     */
@@ -42,15 +33,6 @@ class FactTable(
     this
   }
 
-  /** analysis-time schema validation (the reference's KeyError,
-    * tables.py:2184-2197: all keyrefs + measures required)
-    */
-  protected def requireColumns(df: DataFrame, cols: Seq[String], op: String): Unit = {
-    val missing = cols.filterNot(df.columns.contains)
-    require(missing.isEmpty,
-      s"$name.$op: input is missing required column(s) ${missing.mkString(", ")} " +
-        s"(has: ${df.columns.mkString(", ")})")
-  }
   def initEmpty(schemaFrom: DataFrame): this.type =
     init(schemaFrom.select(allColumns.map(col): _*).limit(0))
 

@@ -107,4 +107,35 @@ class SourcesSpec extends SparkSpec {
     assert(new java.io.File(s"$tmp/dep_dim/v=1").exists(), "old version retained")
     assert(graft.core.EtlSession.open(spark, tmp, "dep_dim").count() == dim.current.count())
   }
+
+  test("a failed commit publishes nothing, and the next commit reuses its version") {
+    import graft.core.EtlSession
+    // a table whose save writes a torn prefix of its rows and then fails
+    final class Flaky(var current: org.apache.spark.sql.DataFrame) extends graft.tables.ManagedTable {
+      val name = "flaky"
+      var fail = false
+      override def save(path: String): Unit =
+        if (!fail) super.save(path)
+        else {
+          current.limit(1).write.mode("overwrite").parquet(path)
+          throw new java.io.IOException("disk full")
+        }
+    }
+    def ids(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getLong(0)).toSet
+    val es = new EtlSession(spark)
+    val flaky = new Flaky(spark.range(0, 3).toDF("id"))
+    es.register(flaky)
+    val tmp = java.nio.file.Files.createTempDirectory("etl_atomic").toString
+    assert(es.commit(tmp) == 1L)
+
+    flaky.current = spark.range(10, 15).toDF("id")
+    flaky.fail = true
+    intercept[java.io.IOException](es.commit(tmp))
+    assert(EtlSession.currentVersion(tmp) == 1L, "a failed commit must not move the pointer")
+    assert(ids(EtlSession.open(spark, tmp, "flaky")) == Set(0L, 1L, 2L))
+
+    flaky.fail = false
+    assert(es.commit(tmp) == 2L, "the next commit reuses the failed one's version")
+    assert(ids(EtlSession.open(spark, tmp, "flaky")) == (10L until 15L).toSet)
+  }
 }
