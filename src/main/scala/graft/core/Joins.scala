@@ -1,7 +1,8 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{abs, array, broadcast, col, explode,
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{abs, array, broadcast, col, count, explode,
   floor, lit, raise_error, sequence, when, xxhash64}
 
 /** Size-aware join-side policy.
@@ -355,5 +356,30 @@ object Joins {
       case (c, (lk, rk)) => c && l(lk) === r(rk)
     }
     l.join(r, cond).drop("__bk", "__bkr")
+  }
+
+  /** The rows of `df` whose `bucket` holds at most `maxBucket` rows — the
+    * degenerate-bucket guard of candidate generation (a boilerplate band
+    * key yields quadratic pairs and no signal). The count is a window over
+    * the bucket key, so a join on that key that follows reuses its exchange.
+    */
+  def capBuckets(df: DataFrame, bucket: Seq[String], maxBucket: Int): DataFrame =
+    df.withColumn("__cnt", count(lit(1)).over(Window.partitionBy(bucket.map(col): _*)))
+      .filter(col("__cnt") <= maxBucket).drop("__cnt")
+
+  /** Within-bucket candidate pairs, the one self-join behind near-dup and
+    * co-occurrence candidates: every pair of rows of `df` sharing a
+    * `bucket`, as (bucket..., id_a, id_b, c_a, c_b per `carry` column c)
+    * with `id_a < id_b` — one equi-shuffle, Σ|bucket|² work. Null buckets
+    * and ids pair with nothing; no distinct, so a repeated row keeps its
+    * multiplicity. `maxBucket` first applies [[capBuckets]].
+    */
+  def bucketPairs(df: DataFrame, bucket: Seq[String], id: String,
+                  carry: Seq[String] = Nil,
+                  maxBucket: Int = Int.MaxValue): DataFrame = {
+    val src = if (maxBucket == Int.MaxValue) df else capBuckets(df, bucket, maxBucket)
+    def side(s: String) = src.select(bucket.map(col) ++
+      (col(id).as(s"id_$s") +: carry.map(c => col(c).as(s"${c}_$s"))): _*)
+    side("a").join(side("b"), bucket).filter(col("id_a") < col("id_b"))
   }
 }

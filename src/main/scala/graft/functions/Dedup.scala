@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.core.Joins.{bucketPairs, capBuckets}
 
 /** Deduplication operators for training-data pipelines: exact,
   * MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
@@ -54,6 +55,13 @@ object Dedup {
     transform(sequence(lit(0), lit(bands - 1)),
       b => xxhash64(b, slice(sigCol, b * rows + 1, lit(rows))))
 
+  /** rows per band; a remainder would leave signature positions unused,
+    * and bands > k empty slices that put the whole corpus in one bucket */
+  private def bandRows(k: Int, bands: Int): Int = {
+    require(bands > 0 && k % bands == 0, s"bands ($bands) must be positive and divide k ($k)")
+    k / bands
+  }
+
   /** MinHash+LSH near-duplicate pairs with exact Jaccard verification.
     *
     * Pipeline: shingle → signature → explode band keys → shuffle on
@@ -69,7 +77,7 @@ object Dedup {
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    n: Int = 3, k: Int = 64, bands: Int = 16,
                    threshold: Double = 0.7, maxBucket: Int = 2000): DataFrame = {
-    val rows = k / bands
+    val rows = bandRows(k, bands)
     // Signatures are consumed by three downstream plans (banding, and both
     // sides of the verification join): persist so the (HOF-interpreted,
     // non-codegen) signature computation runs exactly once per document.
@@ -90,16 +98,8 @@ object Dedup {
         .withColumn("__bands", lshBandKeys(col("__sig"), bands, rows)))
 
     val exploded = sigs.select(col(idCol), posexplode(col("__bands")).as(Seq("__b", "__bk")))
-
-    val bucketed = exploded
-      .withColumn("__cnt", count(lit(1)).over(Window.partitionBy(col("__b"), col("__bk"))))
-      .filter(col("__cnt") <= maxBucket)
-
-    val a = bucketed.select(col("__b"), col("__bk"), col(idCol).as("__ida"))
-    val b = bucketed.select(col("__b"), col("__bk"), col(idCol).as("__idb"))
-    val candidates = a.join(b, Seq("__b", "__bk"))
-      .filter(col("__ida") < col("__idb"))
-      .select(col("__ida"), col("__idb")).distinct()
+    val candidates = bucketPairs(exploded, Seq("__b", "__bk"), idCol, maxBucket = maxBucket)
+      .select(col("id_a"), col("id_b")).distinct()
 
     // Verification prefilter: the signature match fraction is an unbiased
     // estimate of Jaccard with sd <= 1/(2*sqrt(k)); cutting at threshold/2
@@ -107,25 +107,25 @@ object Dedup {
     // shingle-set intersection for the hopeless bulk of candidates.
     val sg = sigs.select(col(idCol), col("__sig"))
     val prefiltered = candidates
-      .join(sg.select(col(idCol).as("__ida"), col("__sig").as("__siga")), Seq("__ida"))
-      .join(sg.select(col(idCol).as("__idb"), col("__sig").as("__sigb")), Seq("__idb"))
+      .join(sg.select(col(idCol).as("id_a"), col("__sig").as("__siga")), Seq("id_a"))
+      .join(sg.select(col(idCol).as("id_b"), col("__sig").as("__sigb")), Seq("id_b"))
       .filter(graft.plans.NativeFunctions.sigMatchFraction(col("__siga"), col("__sigb")) >= threshold / 2)
-      .select(col("__ida"), col("__idb"))
+      .select(col("id_a"), col("id_b"))
 
     // exact Jaccard only for survivors: shingle the candidate docs on demand
     val candIds = prefiltered
-      .select(explode(array(col("__ida"), col("__idb"))).as(idCol)).distinct()
+      .select(explode(array(col("id_a"), col("id_b"))).as(idCol)).distinct()
     val candSh = df.join(candIds, Seq(idCol), "left_semi")
       .select(col(idCol), shingles(col(textCol), n).as("__sh"))
     val verified = prefiltered
-      .join(candSh.select(col(idCol).as("__ida"), col("__sh").as("__sha")), Seq("__ida"))
-      .join(candSh.select(col(idCol).as("__idb"), col("__sh").as("__shb")), Seq("__idb"))
+      .join(candSh.select(col(idCol).as("id_a"), col("__sh").as("__sha")), Seq("id_a"))
+      .join(candSh.select(col(idCol).as("id_b"), col("__sh").as("__shb")), Seq("id_b"))
       .withColumn("jaccard",
         size(array_intersect(col("__sha"), col("__shb"))).cast("double") /
           size(array_union(col("__sha"), col("__shb"))).cast("double"))
       .filter(col("jaccard") >= threshold)
 
-    verified.select(col("__ida").as("id_a"), col("__idb").as("id_b"), round(col("jaccard"), 4).as("jaccard"))
+    verified.select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
   }
 
   /** Persistable MinHash index of a corpus: (id, signature, band keys).
@@ -135,7 +135,7 @@ object Dedup {
     */
   def minhashIndex(df: DataFrame, idCol: String, textCol: String,
                    n: Int = 3, k: Int = 64, bands: Int = 16): DataFrame = {
-    val rows = k / bands
+    val rows = bandRows(k, bands)
     df.select(col(idCol), shingles(col(textCol), n).as("__sh"))
       .select(col(idCol), minhashSignature(col("__sh"), k).as("__sig"))
       .withColumn("__bands", lshBandKeys(col("__sig"), bands, rows))
@@ -175,22 +175,14 @@ object Dedup {
       posexplode(col("__bands")).as(Seq("__b", "__bk")))
     val incB = inc.select(col(idCol).as("__idn"),
       posexplode(col("__bands")).as(Seq("__b", "__bk")))
-    // cap degenerate corpus buckets (boilerplate content) — bounds the
-    // per-batch join fan-out the same way minhashPairs bounds the
-    // self-join. Round 16 (guide §2.3): the cap is computed ONLY for the
-    // buckets this batch actually probes — the old window shuffled the
-    // WHOLE accreted index banding every micro-batch (O(corpus) per
-    // batch, the one corpus-proportional shuffle left in the ingest
-    // path); the broadcast semi-join on the batch's own (band, key) set
-    // keeps the shuffled population batch-proportional while still
-    // counting each probed bucket's FULL size, so every bucket's
-    // kept/dropped verdict — and the match set — is unchanged.
+    // cap degenerate corpus buckets (boilerplate content), counted ONLY
+    // over the buckets this batch probes: the broadcast semi-join on the
+    // batch's (band, key) set keeps the window's shuffle batch-proportional
+    // instead of O(corpus) per micro-batch, and each probed bucket still
+    // counts its FULL size, so every kept/dropped verdict is unchanged.
     val probed = broadcast(incB.select(col("__b"), col("__bk")).distinct())
-    val idxCapped = idxB
-      .join(probed, Seq("__b", "__bk"), "left_semi")
-      .withColumn("__cnt", count(lit(1)).over(Window.partitionBy(col("__b"), col("__bk"))))
-      .filter(col("__cnt") <= maxBucket)
-      .select(col("__b"), col("__bk"), col("__idc"))
+    val idxCapped = capBuckets(idxB.join(probed, Seq("__b", "__bk"), "left_semi"),
+      Seq("__b", "__bk"), maxBucket)
 
     val candidates = incB.join(idxCapped, Seq("__b", "__bk"))
       .filter(col("__idn") =!= col("__idc"))
@@ -246,12 +238,8 @@ object Dedup {
     val chunks = withFp.select(col(idCol), col("__fp"),
       posexplode(transform(sequence(lit(0), lit(3)),
         i => call_function("shiftrightunsigned", col("__fp"), i * 16).bitwiseAND(0xFFFFL))).as(Seq("__c", "__ck")))
-    val a = chunks.select(col("__c"), col("__ck"), col(idCol).as("__ida"), col("__fp").as("__fpa"))
-    val b = chunks.select(col("__c"), col("__ck"), col(idCol).as("__idb"), col("__fp").as("__fpb"))
-    a.join(b, Seq("__c", "__ck"))
-      .filter(col("__ida") < col("__idb"))
-      .select(col("__ida").as("id_a"), col("__idb").as("id_b"),
-        hamming64(col("__fpa"), col("__fpb")).as("hamming"))
+    bucketPairs(chunks, Seq("__c", "__ck"), idCol, Seq("__fp"))
+      .select(col("id_a"), col("id_b"), hamming64(col("__fp_a"), col("__fp_b")).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
   }
@@ -275,8 +263,8 @@ object Dedup {
 
   /** Partial-overlap near-dup pairs by shared winnowed fingerprints: explode
     * the fingerprint sets, cap degenerate fingerprints (boilerplate chunks
-    * present in more than `maxDocsPerFp` documents — the same guard as
-    * minhashPairs' maxBucket), equi-shuffle self-join on the fingerprint, and
+    * present in more than `maxDocsPerFp` documents, [[graft.core.Joins.capBuckets]]),
+    * self-join on the fingerprint ([[graft.core.Joins.bucketPairs]]), and
     * keep pairs sharing at least `minShared`. One shuffle keyed by
     * fingerprint — the exact-dedup plan shape, never all-pairs.
     */
@@ -291,12 +279,7 @@ object Dedup {
       .repartition(parallelism, col(idCol))
       .select(col(idCol),
         explode(winnowedFingerprints(col(textCol), k, window)).as("__fp"))
-    val capped = fps
-      .withColumn("__cnt", count(lit(1)).over(Window.partitionBy(col("__fp"))))
-      .filter(col("__cnt") <= maxDocsPerFp)
-    val a = capped.select(col("__fp"), col(idCol).as("id_a"))
-    val b = capped.select(col("__fp"), col(idCol).as("id_b"))
-    a.join(b, Seq("__fp")).filter(col("id_a") < col("id_b"))
+    bucketPairs(fps, Seq("__fp"), idCol, maxBucket = maxDocsPerFp)
       .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
   }
@@ -328,11 +311,10 @@ object Dedup {
                             k: Int = 4, window: Int = 4,
                             maxDocsPerFp: Int = 100): DataFrame = {
     val parallelism = bench.sparkSession.sparkContext.defaultParallelism * 2
-    bench.select(col(benchId).as("bench_id"), col(benchText).as("__t"))
+    val fps = bench.select(col(benchId).as("bench_id"), col(benchText).as("__t"))
       .repartition(parallelism, col("bench_id"))
       .select(col("bench_id"), explode(winnowedFingerprints(col("__t"), k, window)).as("__fp"))
-      .withColumn("__cnt", count(lit(1)).over(Window.partitionBy(col("__fp"))))
-      .filter(col("__cnt") <= maxDocsPerFp).drop("__cnt")
+    capBuckets(fps, Seq("__fp"), maxDocsPerFp)
   }
 
   /** [[contamination]]'s match stage against a pre-built
@@ -894,7 +876,7 @@ object Dedup {
     * dedup shape at 100 TB (more clusters → smaller quadratic terms).
     *
     * `maxCluster` is the whale guard, the semantic twin of
-    * [[minhashPairs]]' `maxBucket`: one degenerate cluster of size n would
+    * [[graft.core.Joins.capBuckets]]: one degenerate cluster of size n would
     * otherwise re-create the n² blow-up the clustering exists to avoid.
     * Oversized clusters sub-split into ceil(n/maxCluster) md5-derived
     * sub-buckets and only same-sub pairs are compared — candidate count is
@@ -924,15 +906,10 @@ object Dedup {
       .withColumn("__sub", when(col("__cn") <= maxCluster, lit(0L))
         .otherwise(Sampling.hash60(col("__vid"), "semsub")
           % ceil(col("__cn").cast("double") / maxCluster).cast("long")))
-    val a = split.select(col("cluster"), col("__sub"),
-      col("__vid").as("__ida"), col("__v").as("__va"))
-    val b = split.select(col("cluster"), col("__sub"),
-      col("__vid").as("__idb"), col("__v").as("__vb"))
-    a.join(b, Seq("cluster", "__sub"))
-      .filter(col("__ida") < col("__idb"))
-      .withColumn("cosine", Vectors.cosine(col("__va"), col("__vb")))
+    bucketPairs(split, Seq("cluster", "__sub"), "__vid", Seq("__v"))
+      .withColumn("cosine", Vectors.cosine(col("__v_a"), col("__v_b")))
       .filter(col("cosine") >= threshold)
-      .select(col("__ida").as("id_a"), col("__idb").as("id_b"), col("cluster"),
+      .select(col("id_a"), col("id_b"), col("cluster"),
         round(col("cosine").cast(org.apache.spark.sql.types.DecimalType(18, 8)), 4)
           .cast("double").as("cosine"))
   }
@@ -953,8 +930,8 @@ object Dedup {
     * frame, frozen — per-doc sizes AND candidate generation both derive
     * from its materialized blocks. Candidates come only from shingles held
     * by ≤ `maxDf` documents (the rare-shingle cap: a shingle in half the
-    * corpus generates quadratic pairs and zero signal — the maxBucket
-    * discipline of [[minhashPairs]]), expanded ordered at scan speed by the
+    * corpus generates quadratic pairs and zero signal, as in
+    * [[graft.core.Joins.capBuckets]]), expanded ordered at scan speed by the
     * index-bounded `transform` (each shingle ≤ maxDf² pairs, never
     * corpus-quadratic). Shared-shingle counts under-count by the capped
     * common shingles, so the count filter `minShared` is a candidate gate,
@@ -998,6 +975,7 @@ object Dedup {
                                  minShared: Int,
                                  minContain: Double): DataFrame = {
     val sizes = sh.groupBy(col("__id")).agg(count(lit(1)).as("__sz"))
+    // not Joins.bucketPairs: one groupBy shuffle caps by set size and expands the ordered pairs
     val pairs = sh.groupBy(col("__sh"))
       .agg(sort_array(collect_set(col("__id"))).as("__ids"))
       .filter(size(col("__ids")).between(2, maxDf))
@@ -1105,8 +1083,7 @@ object Dedup {
                   bands: Int = 4, maxDf: Int = 64,
                   minShared: Int = 2): DataFrame = {
     require(thresholds.nonEmpty, "thresholds must be non-empty")
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
+    val r = bandRows(k, bands)
     val dec = org.apache.spark.sql.types.DecimalType(18, 8)
     val bridge = org.apache.spark.sql.graftbridge.Bridge
     def powInt(c: Column, e: Int): Column = Seq.fill(e)(c).reduce(_ * _)
@@ -1148,9 +1125,7 @@ object Dedup {
     // pair set — then ONE left join flags each truth pair; shipping the band
     // arrays to every pair row (two wide joins) measured 2x slower
     val bkx = bandKeys.select(col(idCol), explode(col("__bk")).as("__k"))
-    val hits = bkx.select(col(idCol).as("id_a"), col("__k"))
-      .join(bkx.select(col(idCol).as("id_b"), col("__k")), Seq("__k"))
-      .filter(col("id_a") < col("id_b"))
+    val hits = bucketPairs(bkx, Seq("__k"), idCol)
       .select(col("id_a"), col("id_b")).distinct()
     val evald = bridge.freeze(pairs
       .join(hits.withColumn("__c", lit(true)), Seq("id_a", "id_b"), "left")
@@ -1193,13 +1168,10 @@ object Dedup {
     // to (id, vec).
     val bucketed = df.select(col(idCol), col(vecCol).as("__v"))
       .withColumn("__bucket", Vectors.signLshBucket(col("__v"), planes))
-    val a = bucketed.select(col("__bucket"), col(idCol).as("__ida"), col("__v").as("__va"))
-    val b = bucketed.select(col("__bucket"), col(idCol).as("__idb"), col("__v").as("__vb"))
-    a.join(b, Seq("__bucket"))
-      .filter(col("__ida") < col("__idb"))
-      .withColumn("cosine", Vectors.cosine(col("__va"), col("__vb")))
+    bucketPairs(bucketed, Seq("__bucket"), idCol, Seq("__v"))
+      .withColumn("cosine", Vectors.cosine(col("__v_a"), col("__v_b")))
       .filter(col("cosine") >= threshold)
-      .select(col("__ida").as("id_a"), col("__idb").as("id_b"),
+      .select(col("id_a"), col("id_b"),
         // decimal-staged rounding so external engines agree at the boundary
         round(col("cosine").cast(org.apache.spark.sql.types.DecimalType(18, 8)), 4)
           .cast("double").as("cosine"))

@@ -408,10 +408,9 @@ object Events {
     val nUsers = broadcast(ut.select(col("__u")).distinct()
       .agg(count(lit(1)).as("__n")))
     val perType = ut.groupBy(col("__t")).agg(count(lit(1)).as("__c"))
-    val pairs = ut.select(col("__u"), col("__t").as("type_a"))
-      .join(ut.select(col("__u"), col("__t").as("type_b")), Seq("__u"))
-      .filter(col("type_a") < col("type_b"))
-      .groupBy(col("type_a"), col("type_b")).agg(count(lit(1)).as("n_ab"))
+    val pairs = graft.core.Joins.bucketPairs(ut, Seq("__u"), "__t")
+      .groupBy(col("id_a").as("type_a"), col("id_b").as("type_b"))
+      .agg(count(lit(1)).as("n_ab"))
     pairs
       .join(broadcast(perType.select(col("__t").as("type_a"), col("__c").as("__ca"))), Seq("type_a"))
       .join(broadcast(perType.select(col("__t").as("type_b"), col("__c").as("__cb"))), Seq("type_b"))
@@ -1023,17 +1022,13 @@ object Events {
     // pass that touches the data) runs four times
     val daily = org.apache.spark.sql.graftbridge.Bridge.freeze(
       dailyCounts.select(col("event_type"), col("day"), col("n")))
-    val a = daily.select(col("event_type"), col("day").as("__da"),
-      col("n").as("__na"))
-    val b = daily.select(col("event_type"), col("day").as("__db"),
-      col("n").as("__nb"))
     // triangular day-pair join: each pair votes a direction and a slope
-    val pairs = a.join(b, Seq("event_type")).filter(col("__da") < col("__db"))
+    val pairs = graft.core.Joins.bucketPairs(daily, Seq("event_type"), "day", Seq("n"))
       .select(col("event_type"),
-        when(col("__nb") > col("__na"), 1L)
-          .when(col("__nb") < col("__na"), -1L).otherwise(0L).as("__sgn"),
-        ((col("__nb") - col("__na")).cast("double") /
-          datediff(col("__db"), col("__da")).cast("double")).as("__slope"))
+        when(col("n_b") > col("n_a"), 1L)
+          .when(col("n_b") < col("n_a"), -1L).otherwise(0L).as("__sgn"),
+        ((col("n_b") - col("n_a")).cast("double") /
+          datediff(col("id_b"), col("id_a")).cast("double")).as("__slope"))
     val s = pairs.groupBy(col("event_type")).agg(
       sum(col("__sgn")).as("__s"),
       percentile(col("__slope"), lit(0.5)).as("__slope"))
@@ -1716,8 +1711,8 @@ object Events {
     * Scale shape: the line stream collapses ONCE to the distinct
     * (basket, item) frame (frozen — it feeds sizes, supports and both
     * pair-join sides); baskets above `maxBasket` items drop from pair
-    * generation (the [[graft.functions.Dedup.minhashPairs]] maxBucket
-    * guard — a degenerate mega-basket generates quadratic pairs and no
+    * generation (the [[graft.core.Joins.capBuckets]] guard — a
+    * degenerate mega-basket generates quadratic pairs and no
     * signal); pairs come from the basket-keyed self-join (per-basket
     * size², never corpus²); supports broadcast back. Top-N is
     * TakeOrderedAndProject on the UNROUNDED lift (fixed double order,
@@ -1744,16 +1739,15 @@ object Events {
                          maxBasket: Int): DataFrame = {
     val dec8 = org.apache.spark.sql.types.DecimalType(18, 8)
     val bridge = org.apache.spark.sql.graftbridge.Bridge
+    // not Joins.capBuckets: capped is frozen, so no later join reuses a window's exchange
     val ok = bi.groupBy(col("__b")).agg(count(lit(1)).as("__sz"))
       .filter(col("__sz") <= maxBasket).drop("__sz")
     val capped = bridge.freeze(
       bi.join(graft.core.Joins.maybeBroadcast(ok), Seq("__b"), "left_semi"))
     val nB = broadcast(capped.agg(countDistinct(col("__b")).as("__n")))
     val supp = capped.groupBy(col("__i")).agg(count(lit(1)).as("__s"))
-    val pairs = capped.select(col("__b"), col("__i").as("item_a"))
-      .join(capped.select(col("__b"), col("__i").as("item_b")), Seq("__b"))
-      .filter(col("item_a") < col("item_b"))
-      .groupBy(col("item_a"), col("item_b"))
+    val pairs = graft.core.Joins.bucketPairs(capped, Seq("__b"), "__i")
+      .groupBy(col("id_a").as("item_a"), col("id_b").as("item_b"))
       .agg(count(lit(1)).as("support"))
       .filter(col("support") >= minSupport)
     val scored = pairs

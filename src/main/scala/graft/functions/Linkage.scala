@@ -31,7 +31,7 @@ object Linkage {
     * scored `1 − lev/maxlen` (decimal-staged) and kept at `minSim`+.
     * `maxBlock` caps pathological blocks (an "UNKNOWN" name bucket would
     * otherwise go quadratic): rows in oversized blocks are dropped from
-    * candidate generation — the [[Dedup.minhashPairs]] maxBucket guard;
+    * candidate generation — the [[graft.core.Joins.capBuckets]] guard;
     * a block that big is a data-quality problem, not a linkage
     * candidate set.
     *
@@ -64,6 +64,7 @@ object Linkage {
     // to the bounded |blocks|-row table, and surviving keys semi-join
     // back (size-gated broadcast) — scan speed, where a count WINDOW
     // would sort the whole side per block key
+    // not Joins.capBuckets: the index side is frozen, so no later join reuses a window's exchange
     val keyCols = s"__p$side" +: blocks.indices.map(i => s"__b$i$side")
     val ok = prepped.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("__cnt"))

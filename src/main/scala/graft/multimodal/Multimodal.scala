@@ -573,9 +573,7 @@ object Multimodal {
         shiftright(col("hash_hi"), 16).bitwiseAND(lit(65535L))))
         .as(Seq("__j", "__v")))
       .select(col("doc_id"), (col("__j") * 65536L + col("__v")).as("__bk"))
-    val cand = b.select(col("doc_id").as("id_a"), col("__bk"))
-      .join(b.select(col("doc_id").as("id_b"), col("__bk")), Seq("__bk"))
-      .filter(col("id_a") < col("id_b"))
+    val cand = graft.core.Joins.bucketPairs(b, Seq("__bk"), "doc_id")
       .select(col("id_a"), col("id_b")).distinct()
     cand
       .join(hashes.select(col("doc_id").as("id_a"),

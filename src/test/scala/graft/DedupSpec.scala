@@ -32,6 +32,20 @@ class DedupSpec extends SparkSpec {
     assert(mh == exact)
   }
 
+  test("minhash band geometry: bands must be positive and divide k") {
+    import spark.implicits._
+    val df = Seq((1L, "one two three four five"), (2L, "one two three four six"))
+      .toDF("doc_id", "text")
+    // bands > k hashes empty slices (one corpus-wide bucket per band);
+    // a remainder leaves trailing signature positions unused
+    for ((k, bands) <- Seq(16 -> 32, 64 -> 24, 16 -> 0)) {
+      intercept[IllegalArgumentException](
+        Dedup.minhashPairs(df, "doc_id", "text", k = k, bands = bands))
+      intercept[IllegalArgumentException](
+        Dedup.minhashIndex(df, "doc_id", "text", k = k, bands = bands))
+    }
+  }
+
   test("repetition signals: degenerate text scores high, varied text low") {
     import spark.implicits._
     val df = Seq(
