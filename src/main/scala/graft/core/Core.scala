@@ -220,11 +220,12 @@ final class EtlSession(val spark: SparkSession) {
 
   def register(t: graft.tables.ManagedTable): Unit = registry(t.name) = t
 
-  /** Dependency-ordered atomic publish ([[EtlSession.publish]]): dimensions
-    * write before facts, respecting `dependson` (reference:
-    * tables.py:2651-2652 flush ordering). A failed commit leaves the
-    * published version untouched; a commit keeps every older version.
-    * Returns the published version.
+  /** Dependency-ordered publish ([[EtlSession.publish]]): dimensions write
+    * before facts, respecting `dependson` (reference: tables.py:2651-2652
+    * flush ordering), and the version becomes visible only when its marker
+    * is created after the last write. A commit that fails before that
+    * leaves the published version untouched; a commit keeps every older
+    * version's tables. Returns the published version.
     */
   def commit(baseDir: String): Long =
     EtlSession.publish(spark, baseDir, topoSort(registry.values.toSeq).map(t => t.name -> (t.save _)))
@@ -248,69 +249,59 @@ final class EtlSession(val spark: SparkSession) {
 }
 
 object EtlSession {
-  import org.apache.hadoop.fs.{FileContext, Options, Path}
+  import org.apache.hadoop.fs.{FileSystem, Path}
 
   /** The one publish protocol, for commits and monitor checkpoints alike
-    * (copy-on-write, SURVEY §7.3). With n the published version, each
-    * `(name, write)` writes `<baseDir>/<name>/v=<n+1>`, and only after every
-    * write succeeds does the `_CURRENT` pointer file swap to n+1: readers
-    * keep seeing version n until then, and a failed publish leaves it
-    * untouched. What a failed attempt left under n+1 is deleted first. All
-    * file access goes through the Hadoop FileSystem of `baseDir`'s scheme,
-    * so file://, hdfs:// and object-store URIs work from any node; the
-    * overwrite-rename is atomic on HDFS/POSIX and degrades to copy+delete on
-    * stores without atomic rename. Retention is the caller's. Returns n+1.
+    * (copy-on-write, SURVEY §7.3). The current version n is the largest
+    * empty marker `<baseDir>/_published/<n>`. Each `(name, write)` writes
+    * `<baseDir>/<name>/v=<n+1>`; only after every write succeeds is marker
+    * n+1 created, never renamed or rewritten, and only then are the older
+    * markers deleted. So readers see n until n+1 is whole, and a publish
+    * that fails at any step leaves n or n+1 published, never neither. What
+    * a failed attempt left under n+1 is deleted first. All file access goes
+    * through the Hadoop FileSystem of `baseDir`'s scheme, so file://,
+    * hdfs:// and object-store URIs work from any node. Retention of table
+    * data is the caller's. Returns n+1.
     */
   def publish(spark: SparkSession, baseDir: String, tables: Seq[(String, String => Unit)]): Long = {
-    val hconf = spark.sessionState.newHadoopConf()
     val base = new Path(baseDir)
-    val fs = base.getFileSystem(hconf)
-    fs.mkdirs(base)
-    val next = currentVersion(baseDir, hconf) + 1
+    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
+    val older = markers(fs, base)
+    val next = (0L +: older).max + 1
     fs.globStatus(new Path(base, s"*/v=$next")).foreach(st => fs.delete(st.getPath, true))
     tables.foreach { case (name, write) => write(s"$baseDir/$name/v=$next") }
-    val tmp = new Path(base, s"_CURRENT.tmp.$next")
-    val out = fs.create(tmp, true)
-    try out.write(next.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // FileContext rename supports OVERWRITE (atomic where the FS can)
-    FileContext.getFileContext(base.toUri, hconf).rename(fs.makeQualified(tmp),
-      fs.makeQualified(new Path(base, "_CURRENT")), Options.Rename.OVERWRITE)
+    if (!fs.createNewFile(new Path(base, s"_published/$next")))
+      throw new IllegalStateException(s"version $next is already published under $baseDir")
+    older.foreach(v => fs.delete(new Path(base, s"_published/$v"), false))
     next
   }
 
-  /** the tables of the version published under `baseDir`, whose pointer is
+  /** the tables of the version published under `baseDir`, whose marker is
     * read once: each name maps to its frame, or to None when that version
     * holds no such table. Fails, naming `baseDir`, when nothing is published.
     */
   def published(spark: SparkSession, baseDir: String): String => Option[DataFrame] = {
-    val hconf = spark.sessionState.newHadoopConf()
-    val v = currentVersion(baseDir, hconf)
+    val base = new Path(baseDir)
+    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
+    val v = (0L +: markers(fs, base)).max
     require(v > 0, s"no published version under $baseDir")
-    val fs = new Path(baseDir).getFileSystem(hconf)
     name => {
-      val p = new Path(baseDir, s"$name/v=$v")
+      val p = new Path(base, s"$name/v=$v")
       if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
     }
   }
 
-  /** currently-published commit version under `baseDir` (0 if none), read
-    * through the Hadoop FileSystem for the path's scheme
+  /** currently-published version under `baseDir` (0 if none), read through
+    * the active session's Hadoop FileSystem for the path's scheme
     */
-  def currentVersion(baseDir: String,
-                     hconf: org.apache.hadoop.conf.Configuration = null): Long = {
-    val conf = Option(hconf)
-      .orElse(SparkSession.getActiveSession.map(_.sessionState.newHadoopConf()))
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    val p = new Path(baseDir, "_CURRENT")
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) 0L
-    else {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      finally in.close()
-    }
+  def currentVersion(baseDir: String): Long = {
+    val base = new Path(baseDir)
+    (0L +: markers(base.getFileSystem(SparkSession.active.sessionState.newHadoopConf()), base)).max
   }
+
+  /** the versions whose markers exist under `base` */
+  private def markers(fs: FileSystem, base: Path): Seq[Long] =
+    Option(fs.globStatus(new Path(base, "_published/*"))).toSeq.flatten.map(_.getPath.getName.toLong)
 
   /** read a committed table at the published version */
   def open(spark: SparkSession, baseDir: String, name: String): DataFrame =

@@ -259,10 +259,12 @@ object Streaming {
     * the streaming source's `checkpointLocation` decides which micro-batches
     * replay after a restart, and the restored states resume from exactly
     * the ones it will not re-feed. A save publishes the states as a new
-    * version the way a commit does ([[graft.core.EtlSession.publish]]), so a
-    * save that fails partway leaves the last checkpoint restorable, then
-    * deletes every older version (safe for the directory a restore read
-    * from: see [[DeltaState]]).
+    * version the way a commit does ([[graft.core.EtlSession.publish]]): the
+    * version's marker is created after its last table is written, so a
+    * save that fails at any step leaves the last checkpoint or the new one
+    * restorable. Once the new marker exists, the save deletes every older
+    * version's tables (safe for the directory a restore read from: see
+    * [[DeltaState]]).
     */
   trait Monitor {
     private val states = scala.collection.mutable.ArrayBuffer.empty[(String, DeltaState)]

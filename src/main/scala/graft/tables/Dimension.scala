@@ -78,8 +78,7 @@ class Dimension(
     val attributes: Seq[String],
     val lookupatts: Seq[String],
     val defaultIdValue: Long = -1L,
-    val keyAssigner: KeyAssigner = DistributedDenseAssigner,
-    val cacheState: Boolean = false
+    val keyAssigner: KeyAssigner = DistributedDenseAssigner
 ) extends ManagedTable {
 
   protected var state: DataFrame = _
@@ -91,7 +90,6 @@ class Dimension(
   def init(df: DataFrame): this.type = {
     requireColumns(df, allColumns, "init")
     state = df.select(allColumns.map(col): _*)
-    if (cacheState) state = state.cache()
     knownMaxKey = None
     this
   }

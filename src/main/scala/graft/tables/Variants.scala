@@ -23,8 +23,14 @@ class CachedDimension(
     lookupatts: Seq[String],
     defaultIdValue: Long = -1L,
     keyAssigner: KeyAssigner = DistributedDenseAssigner
-) extends Dimension(name, key, attributes, lookupatts, defaultIdValue,
-  keyAssigner, cacheState = true)
+) extends Dimension(name, key, attributes, lookupatts, defaultIdValue, keyAssigner) {
+
+  override def init(df: DataFrame): this.type = {
+    super.init(df)
+    state = state.cache()
+    this
+  }
+}
 
 /** BulkDimension (reference tables.py:2777-2984): full in-memory cache +
   * bulk loading — lookup/ensure never hit the target database; all writes

@@ -1,15 +1,16 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.core.EtlSession
+import graft.core.{EtlSession, KillFs}
 import graft.streaming.Streaming.DeltaState
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The publish contract of [[Streaming.Monitor]] checkpoints: a save writes
-  * a new version and swaps the `_CURRENT` pointer last, through the Hadoop
-  * FileSystem, so a save that fails partway leaves the previous checkpoint
-  * restorable and a checkpoint URI resolves the same way as a plain path.
+  * a new version and creates its marker last, through the Hadoop
+  * FileSystem, so a save that fails at any step leaves the previous or the
+  * new checkpoint restorable and a checkpoint URI resolves the same way as
+  * a plain path.
   */
 class MonitorCheckpointSpec extends SparkSpec {
 
@@ -108,6 +109,39 @@ class MonitorCheckpointSpec extends SparkSpec {
       m2.restoreState(spark, dir)
       assert(m2.readout == m1.readout)
       assert(!inWorkingDir.exists(), s"a save under a file: URI created $inWorkingDir in the working directory")
+    }
+  }
+
+  test("a save killed at any file-system step leaves the old or the new checkpoint restorable") {
+    KillFs.withDir(spark, "graft-ckpt-kill") { (dir, _) =>
+      val m1 = new TwoStates
+      m1.update(batch(0, 10))
+      m1.saveState(dir)
+      var saved = m1.readout // what the published checkpoint holds
+      var from = 10L
+      var finished = false
+      var k = 1
+      while (!finished) {
+        val before = EtlSession.currentVersion(dir)
+        m1.update(batch(from, from + 5))
+        from += 5
+        finished = KillFs.killedAt(k)(m1.saveState(dir)).isRight
+        val after = EtlSession.currentVersion(dir)
+        assert(after == before || after == before + 1, s"killed at step $k: version $before became $after")
+        if (after > before) saved = m1.readout
+        val m2 = new TwoStates
+        m2.restoreState(spark, dir)
+        assert(m2.readout == saved, s"killed at step $k: version $after does not restore")
+
+        m1.saveState(dir)
+        assert(EtlSession.currentVersion(dir) == after + 1, s"the clean save after step $k")
+        val m3 = new TwoStates
+        m3.restoreState(spark, dir)
+        saved = m1.readout
+        assert(m3.readout == saved)
+        k += 1
+      }
+      assert(k > 10, s"a save took only ${k - 1} file-system steps")
     }
   }
 
