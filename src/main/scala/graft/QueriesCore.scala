@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DoubleType, IntegerType, TimestampType}
 
-import graft.core.{Converters, DateSpan, Nm}
+import graft.core.{Converters, DateSpan, Nm, Scans}
 import graft.functions.{Dedup, Layout, Packing, Pii, Sampling, TextAnalysis, Vectors}
 import graft.sources.Sources
 import graft.tables._
@@ -336,11 +335,8 @@ private[graft] object QueriesCore {
 
     // §2.8 top-k per group (window row_number <= k)
     "agg_topk" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_orderpriority"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      t(s, dir, "orders")
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
+      Scans.topPerGroup(t(s, dir, "orders"), Seq(col("o_orderpriority")),
+          Seq(col("o_totalprice").desc, col("o_orderkey").asc), 3, Some("rank"))
         .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"), col("rank"))
         .orderBy(col("o_orderpriority"), col("rank"))
     }),

@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * (vocabulary-growth curves, cumulative distributions, Lorenz curves). This
   * is the classic two-pass parallel scan (Blelloch 1990, "Prefix sums and
   * their applications") expressed in DataFrame ops, so Catalyst still sees
-  * declarative plans.
+  * declarative plans. The same rule gives the one per-group top-k,
+  * [[topPerGroup]].
   */
 object Scans {
 
@@ -159,5 +160,27 @@ object Scans {
     val outCols: Seq[Column] = df.columns.toSeq.map(col) ++
       sumCols.map(c => (sum(col(c)).over(w) + col(s"__o_$c")).as(s"cum_$c"))
     rp.join(broadcast(offsets), Seq("__pid")).select(outCols: _*)
+  }
+
+  /** Per-group top-k, the one "rank, then keep the first k" selection: at
+    * most `k` rows of each `group`, the first in `order` order (the row that
+    * stands for a key in the tables, the per-query or per-group top-k of the
+    * training-data operators). A `row_number` over the group-partitioned
+    * window with the filter directly on it, which Spark's
+    * `InferWindowGroupLimit` turns into a per-group limit below the
+    * shuffle. The number stays as column `rank` when given, else it is
+    * dropped. Callers that need a total order break ties in `order`
+    * themselves. An empty `group` is rejected: it would plan the
+    * single-partition window this codebase bans. A window, not a
+    * `min_by`/`max_by` aggregate: see [[graft.functions.Dedup.exact]].
+    */
+  def topPerGroup(df: DataFrame, group: Seq[Column], order: Seq[Column], k: Int,
+                  rank: Option[String] = None): DataFrame = {
+    require(group.nonEmpty,
+      "topPerGroup: empty group — a per-group top-k needs at least one group column")
+    val rn = rank.getOrElse("__top_rn")
+    val kept = df.withColumn(rn, row_number().over(Window.partitionBy(group: _*).orderBy(order: _*)))
+      .filter(col(rn) <= k)
+    if (rank.isDefined) kept else kept.drop(rn)
   }
 }

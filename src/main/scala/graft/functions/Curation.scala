@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import graft.core.Scans
 
 /** Domain-level curation: aggregate per-domain (per-source) trust signals and
   * curate documents BY their domain's statistics — the RefinedWeb / C4 /
@@ -614,10 +615,7 @@ object Curation {
   def capPerDomain(df: DataFrame, domainCol: String, idCol: String,
                    score: Column, cap: Int): DataFrame = {
     require(cap > 0, "cap must be positive")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(domainCol)).orderBy(score.desc, col(idCol).asc)
-    df.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= cap)
+    Scans.topPerGroup(df, Seq(col(domainCol)), Seq(score.desc, col(idCol).asc), cap, Some("rank"))
       .select(col(idCol), col(domainCol), col("rank"))
   }
 

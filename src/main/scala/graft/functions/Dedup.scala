@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.Joins.{bucketPairs, capBuckets}
+import graft.core.Scans.topPerGroup
 
 /** Deduplication operators for training-data pipelines: exact,
   * MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
@@ -32,13 +33,9 @@ object Dedup {
     * composed pipelines), while the narrow-buffer map-side-combine win never
     * materializes.
     */
-  def exact(df: DataFrame, textCol: String, orderCol: String): DataFrame = {
-    val w = Window.partitionBy(col("__fp")).orderBy(col(orderCol).asc)
-    df.withColumn("__fp", TextAnalysis.fingerprint(col(textCol)))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__fp", "__rn")
-  }
+  def exact(df: DataFrame, textCol: String, orderCol: String): DataFrame =
+    topPerGroup(df.withColumn("__fp", TextAnalysis.fingerprint(col(textCol))),
+      Seq(col("__fp")), Seq(col(orderCol).asc), 1).drop("__fp")
 
   /** MinHash signature: k permutations approximated by k seeded hashes;
     * sig[i] = min over shingles of xxhash64(shingle, i). One pass, pure

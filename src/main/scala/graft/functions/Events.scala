@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Scans
 
 /** Event-stream analytics: funnels, cohort retention, DAU/WAU stickiness,
   * last-touch attribution, volume anomalies, rolling volume. (Reference
@@ -2295,10 +2296,7 @@ object Events {
   def entryPaths(df: DataFrame, userCol: String, typeCol: String,
                  tsCol: String, idCol: String, depth: Int = 3): DataFrame = {
     require(depth > 0, "depth must be positive")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(userCol)).orderBy(col(tsCol), col(idCol))
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= depth)
+    Scans.topPerGroup(df, Seq(col(userCol)), Seq(col(tsCol), col(idCol)), depth, Some("__rn"))
       .groupBy(col(userCol))
       .agg(
         array_join(transform(

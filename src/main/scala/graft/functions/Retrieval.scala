@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.core.Scans
 
 /** Corpus-level text scoring for training-data curation and retrieval:
   * BM25 ranked search and unigram language-model log-probability (the
@@ -517,10 +517,8 @@ object Retrieval {
           * log((col("__n").cast("double") + lit(1.0))
             / (col("__df").cast("double") + lit(1.0))))
           .cast(DecimalType(18, 8)))
-    val w = Window.partitionBy(col("__did"))
-      .orderBy(col("__sd").desc, col("__tok").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= perDoc)
+    Scans.topPerGroup(scored, Seq(col("__did")), Seq(col("__sd").desc, col("__tok").asc),
+        perDoc, Some("rank"))
       .select(col("__did").as(idCol), col("__tok").as("term"), col("tf"),
         round(col("__sd"), 4).cast("double").as("tfidf"),
         col("rank").cast("long").as("rank"))

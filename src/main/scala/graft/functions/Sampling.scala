@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
+import graft.core.Scans.topPerGroup
 
 /** Deterministic sampling and split assignment for training-data pipelines.
   *
@@ -194,12 +194,9 @@ object Sampling {
     val u = (hash60(col(idCol), salt) + lit(1L)).cast("double") /
       lit(math.pow(2.0, 60))
     val key = (log(u) / weight.cast("double")).cast(DecimalType(18, 8))
-    val w = Window.partitionBy(groupCols.map(col): _*)
-      .orderBy(col("__wk").desc, col(idCol).asc)
-    df.filter(weight.cast("double") > 0.0)
-      .withColumn("__wk", key)
-      .withColumn("sample_rank", row_number().over(w).cast("long"))
-      .filter(col("sample_rank") <= k)
+    topPerGroup(df.filter(weight.cast("double") > 0.0).withColumn("__wk", key),
+        groupCols.map(col), Seq(col("__wk").desc, col(idCol).asc), k, Some("sample_rank"))
+      .withColumn("sample_rank", col("sample_rank").cast("long"))
       .drop("__wk")
   }
 
@@ -294,10 +291,7 @@ object Sampling {
     * row count, not the table.
     */
   def stratifiedSample(df: DataFrame, groupCols: Seq[String], idCol: String,
-                       maxPerGroup: Int, salt: String = ""): DataFrame = {
-    val w = Window.partitionBy(groupCols.map(col): _*)
-      .orderBy(hash60(col(idCol), salt).asc, col(idCol).asc)
-    df.withColumn("__sr", row_number().over(w))
-      .filter(col("__sr") <= maxPerGroup).drop("__sr")
-  }
+                       maxPerGroup: Int, salt: String = ""): DataFrame =
+    topPerGroup(df, groupCols.map(col), Seq(hash60(col(idCol), salt).asc, col(idCol).asc),
+      maxPerGroup)
 }

@@ -89,10 +89,9 @@ object Stats {
     val totals = bins.groupBy(col(groupCol)).agg(sum(col("cnt")).as("total"))
     val edges = cum.join(graft.core.Joins.maybeBroadcast(totals), Seq(groupCol))
     qs.map { q =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col(groupCol)).orderBy(col("bin").asc)
-      edges.filter(col("cum_count").cast("double") >= lit(q) * col("total"))
-        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+      graft.core.Scans.topPerGroup(
+          edges.filter(col("cum_count").cast("double") >= lit(q) * col("total")),
+          Seq(col(groupCol)), Seq(col("bin").asc), 1)
         .select(col(groupCol), lit(q).as("q"), col("bin"),
           (col("bin") * width).as("lo"), ((col("bin") + 1) * width).as("hi"),
           col("cum_count"), col("total"))

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.core.Scans.topPerGroup
 
 /** Vector similarity over embedding columns (`array<float>`/`array<double>`).
   *
@@ -47,8 +48,8 @@ object Vectors {
     val joined = q.crossJoin(broadcast(c))
       .filter(col("__qid") =!= col("__cid"))
       .withColumn("cosine", cosinePre(col("__qv"), col("__cv"), col("__qn"), col("__cn")))
-    val w = Window.partitionBy(col("__qid")).orderBy(col("cosine").desc, col("__cid").asc)
-    joined.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
+    topPerGroup(joined, Seq(col("__qid")), Seq(col("cosine").desc, col("__cid").asc), k,
+        Some("__rn"))
       .select(col("__qid").as("query_id"), col("__cid").as("neighbor_id"),
         round(col("cosine").cast(org.apache.spark.sql.types.DecimalType(18, 8)), 4)
           .cast("double").as("cosine"),
@@ -81,9 +82,8 @@ object Vectors {
     val joined = c.crossJoin(broadcast(q))
       .filter(col("__qid") =!= col("__cid"))
       .withColumn("hamming", np.hammingDistance(col("__qb"), col("__cb")))
-    val w = Window.partitionBy(col("__qid"))
-      .orderBy(col("hamming").asc, col("__cid").asc)
-    joined.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
+    topPerGroup(joined, Seq(col("__qid")), Seq(col("hamming").asc, col("__cid").asc), k,
+        Some("__rn"))
       .select(col("__qid").as("query_id"), col("__cid").as("neighbor_id"),
         col("hamming"), col("__rn").as("rank"))
   }
@@ -112,9 +112,8 @@ object Vectors {
       .join(c, Seq("neighbor_id"))
       .withColumn("cosine",
         cosinePre(col("__qv"), col("__cv"), col("__qn"), col("__cn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
+    topPerGroup(scored, Seq(col("query_id")), Seq(col("cosine").desc, col("neighbor_id").asc),
+        k, Some("__rn"))
       .select(col("query_id"), col("neighbor_id"),
         round(col("cosine").cast(org.apache.spark.sql.types.DecimalType(18, 8)), 4)
           .cast("double").as("cosine"),
@@ -191,8 +190,7 @@ object Vectors {
       .withColumn("__qn", norm(col("__qv")))
       .crossJoin(broadcast(cents))
       .withColumn("__cs", cosinePre(col("__qv"), col("__centv"), col("__qn"), col("__centn")))
-    val w = Window.partitionBy(col("__qid")).orderBy(col("__cs").desc, col("__centid").asc)
-    scored.withColumn("__cr", row_number().over(w)).filter(col("__cr") <= nProbe)
+    topPerGroup(scored, Seq(col("__qid")), Seq(col("__cs").desc, col("__centid").asc), nProbe)
       .select(col("__centid").as("__cluster"), col("__qid"), col("__qv"), col("__qn"))
   }
 
@@ -204,9 +202,8 @@ object Vectors {
     val joined = qB.join(cB, Seq("__cluster"))
       .filter(col("__qid") =!= col("__cid"))
       .withColumn("cosine", cosinePre(col("__qv"), col("__cv"), col("__qn"), col("__cn")))
-    val w = Window.partitionBy(col("__qid")).orderBy(col("cosine").desc, col("__cid").asc)
-    joined.select(col("__qid"), col("__cid"), col("cosine")).distinct()
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
+    topPerGroup(joined.select(col("__qid"), col("__cid"), col("cosine")).distinct(),
+        Seq(col("__qid")), Seq(col("cosine").desc, col("__cid").asc), k, Some("__rn"))
       .select(col("__qid").as("query_id"), col("__cid").as("neighbor_id"),
         round(col("cosine").cast(org.apache.spark.sql.types.DecimalType(18, 8)), 4)
           .cast("double").as("cosine"),
@@ -305,14 +302,11 @@ object Vectors {
           .cast("double").as("mean_d2"))
     val a = centroids.select(col("cluster"), col("centroid").as("__ca"))
     val b = centroids.select(col("cluster").as("__nb"), col("centroid").as("__cb"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cluster")).orderBy(col("__d2"), col("__nb"))
-    val sep = a.join(broadcast(b), col("cluster") =!= col("__nb"))
+    val pairs = a.join(broadcast(b), col("cluster") =!= col("__nb"))
       .withColumn("__d2", dot(col("__ca"), col("__ca"))
         - lit(2.0) * dot(col("__ca"), col("__cb"))
         + dot(col("__cb"), col("__cb")))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
+    val sep = topPerGroup(pairs, Seq(col("cluster")), Seq(col("__d2"), col("__nb")), 1)
       .select(col("cluster"), col("__nb").as("nn_cluster"),
         round(col("__d2").cast(org.apache.spark.sql.types.DecimalType(18, 8)), 4)
           .cast("double").as("nn_d2"))
@@ -970,8 +964,8 @@ object Vectors {
       .filter(col("__qid") =!= col("__cid"))
       .groupBy(col("__qid"), col("__cid"))
       .agg(sum(col("__d2")).as("__ad2"))
-    val w = Window.partitionBy(col("__qid")).orderBy(col("__ad2").asc, col("__cid").asc)
-    joined.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
+    topPerGroup(joined, Seq(col("__qid")), Seq(col("__ad2").asc, col("__cid").asc), k,
+        Some("__rn"))
       .select(col("__qid").as("query_id"), col("__cid").as("neighbor_id"),
         round(col("__ad2"), 4).cast("double").as("d2"), col("__rn").as("rank"))
   }
@@ -1001,8 +995,7 @@ object Vectors {
         .withColumn("__d2",
           dot(col("__v"), col("__v")) - lit(2.0) * dot(col("__v"), col("__cv"))
             + dot(col("__cv"), col("__cv")))
-      val w = Window.partitionBy(col(out)).orderBy(col("__d2").asc, col("cluster").asc)
-      scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= probes)
+      topPerGroup(scored, Seq(col(out)), Seq(col("__d2").asc, col("cluster").asc), probes)
         .select(col(out), col("cluster"))
     }
     // IVF pruning: query probes (windowed — the query side is small) against
@@ -1036,8 +1029,8 @@ object Vectors {
       .filter(col("__qid") =!= col("__cid"))
       .groupBy(col("__qid"), col("__cid"))
       .agg(sum(col("__d2")).as("__ad2"))
-    val w = Window.partitionBy(col("__qid")).orderBy(col("__ad2").asc, col("__cid").asc)
-    joined.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
+    topPerGroup(joined, Seq(col("__qid")), Seq(col("__ad2").asc, col("__cid").asc), k,
+        Some("__rn"))
       .select(col("__qid").as("query_id"), col("__cid").as("neighbor_id"),
         round(col("__ad2"), 4).cast("double").as("d2"), col("__rn").as("rank"))
   }
@@ -1069,8 +1062,8 @@ object Vectors {
       .withColumn("__cos",
         cosinePre(col("__qv"), col("__cv"), col("__qn"), col("__cn"))
           .cast(org.apache.spark.sql.types.DecimalType(18, 8)))
-    val w = Window.partitionBy(col("__qid")).orderBy(col("__cos").desc, col("__cid").asc)
-    rer.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
+    topPerGroup(rer, Seq(col("__qid")), Seq(col("__cos").desc, col("__cid").asc), k,
+        Some("__rn"))
       .select(col("__qid").as("query_id"), col("__cid").as("neighbor_id"),
         round(col("__cos"), 4).cast("double").as("cosine"), col("__rn").as("rank"))
   }
@@ -1128,9 +1121,8 @@ object Vectors {
         salt))
       .select(col("__qid"), col("__cid"), col("__cos"), col("__h"))
     val wNear = Window.partitionBy(col("__qid")).orderBy(col("__cos").desc, col("__cid").asc)
-    val wDraw = Window.partitionBy(col("__qid")).orderBy(col("__h").asc, col("__cid").asc)
-    pool.withColumn("__nr", row_number().over(wNear)).filter(col("__nr") > excludeK)
-      .withColumn("__rn", row_number().over(wDraw)).filter(col("__rn") <= k)
+    val rest = pool.withColumn("__nr", row_number().over(wNear)).filter(col("__nr") > excludeK)
+    topPerGroup(rest, Seq(col("__qid")), Seq(col("__h").asc, col("__cid").asc), k, Some("__rn"))
       .select(col("__qid").as("query_id"), col("__cid").as("negative_id"),
         col("__rn").cast("long").as("neg_rank"))
   }
@@ -1173,9 +1165,8 @@ object Vectors {
     val joined = qB.join(cB, Seq("__t", "__bucket"))
       .filter(col("__qid") =!= col("__cid"))
       .withColumn("cosine", cosinePre(col("__qv"), col("__cv"), col("__qn"), col("__cn")))
-    val w = Window.partitionBy(col("__qid")).orderBy(col("cosine").desc, col("__cid").asc)
-    joined.select(col("__qid"), col("__cid"), col("cosine")).distinct()
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
+    topPerGroup(joined.select(col("__qid"), col("__cid"), col("cosine")).distinct(),
+        Seq(col("__qid")), Seq(col("cosine").desc, col("__cid").asc), k, Some("__rn"))
       .select(col("__qid").as("query_id"), col("__cid").as("neighbor_id"),
         round(col("cosine").cast(org.apache.spark.sql.types.DecimalType(18, 8)), 4)
           .cast("double").as("cosine"),

@@ -1952,12 +1952,10 @@ object Streaming {
 
     /** fold one micro-batch of raw events into the per-user prefix state */
     def update(batch: DataFrame): Unit = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("__u")).orderBy(col("__ts"), col("__id"))
-      val b = batch.select(col(userCol).as("__u"), col(tsCol).as("__ts"),
-          col(idCol).as("__id"), col(typeCol).cast("string").as("__ty"))
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= depth)
+      val events = batch.select(col(userCol).as("__u"), col(tsCol).as("__ts"),
+        col(idCol).as("__id"), col(typeCol).cast("string").as("__ty"))
+      val b = graft.core.Scans.topPerGroup(events, Seq(col("__u")),
+          Seq(col("__ts"), col("__id")), depth, Some("__rn"))
         .groupBy(col("__u"))
         .agg(transform(
           array_sort(collect_list(struct(col("__rn").as("r"), col("__ty").as("t")))),

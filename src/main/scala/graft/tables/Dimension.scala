@@ -3,6 +3,8 @@ package graft.tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Scans
+
 /** A table managed by the engine: holds current state as a DataFrame and
   * persists on `save`. Mutating operators (`update`, `scdensure`, merges) are
   * expressed as full-table recomputes of a new immutable DataFrame — the
@@ -165,10 +167,7 @@ class Dimension(
     // in set form extra duplicates collapse, keeping state cardinality
     // invariant — deterministically when orderCol is given)
     val collapsed = orderCol match {
-      case Some(o) =>
-        val w = org.apache.spark.sql.expressions.Window.partitionBy(col(key)).orderBy(o.desc)
-        updates.withColumn("__uw_rn", row_number().over(w))
-          .filter(col("__uw_rn") === 1).drop("__uw_rn")
+      case Some(o) => Scans.topPerGroup(updates, Seq(col(key)), Seq(o.desc), 1)
       case None => updates.dropDuplicates(Seq(key))
     }
     val u = collapsed
@@ -202,8 +201,8 @@ class Dimension(
     *
     * Order-dependence note (SURVEY §7.3): the reference processes rows
     * sequentially so the first occurrence of a member supplies its non-lookup
-    * attributes; we reproduce that with a row_number window over `orderCol`
-    * (caller-supplied stable order, e.g. a source row id).
+    * attributes; we reproduce that with [[graft.core.Scans.topPerGroup]] over
+    * `orderCol` (caller-supplied stable order, e.g. a source row id).
     */
   def ensure(df: DataFrame,
              namemapping: Map[String, String] = Map.empty,
@@ -215,11 +214,10 @@ class Dimension(
     val candidateCols = in.columns.filter(c => attributes.contains(c)).map(col)
     val firstPerMember = orderCol match {
       case Some(o) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(lookupatts.map(col): _*).orderBy(o.asc)
-        in.select(candidateCols.toSeq :+ o.as("__ord"): _*)
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn", "__ord")
+        // ordered by the projected __ord: `o` may read a column that is not
+        // an attribute (a source row id)
+        Scans.topPerGroup(in.select(candidateCols.toSeq :+ o.as("__ord"): _*),
+          lookupatts.map(col), Seq(col("__ord").asc), 1).drop("__ord")
       case None =>
         in.select(candidateCols.toSeq: _*).dropDuplicates(lookupatts)
     }

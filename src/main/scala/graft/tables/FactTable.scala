@@ -3,6 +3,8 @@ package graft.tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Scans
+
 /** Fact table: composite PK of dimension references (`keyrefs`) + `measures`.
   *
   * Reference: pygrametl/tables.py:2136-2355 (`FactTable`, `BatchFactTable`,
@@ -116,21 +118,19 @@ class AccumulatingSnapshotFactTable(
             orderCol: Option[Column] = None): this.type = {
     val mapped = graft.core.Nm.applyMapping(updates, namemapping)
     val collapsed = orderCol match {
-      case Some(o) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(keyrefs.map(col): _*).orderBy(o.desc)
-        mapped.withColumn("__mw_rn", row_number().over(w))
-          .filter(col("__mw_rn") === 1).drop("__mw_rn")
+      case Some(o) => Scans.topPerGroup(mapped, keyrefs.map(col), Seq(o.desc), 1)
       case None => mapped.dropDuplicates(keyrefs)
     }
-    val u = collapsed.select(allColumns.map(col): _*)
+    // __n_present marks the incoming side of the join: an incoming row
+    // whose values are all NULL still clobbers when NULLs do
+    val u = collapsed.select(allColumns.map(col) :+ lit(true).as("__n_present"): _*)
     val updatable = otherrefs ++ measures
     val renamed = updatable.foldLeft(u)((d, c) => d.withColumnRenamed(c, s"__n_$c"))
     val joined = state.join(renamed, keyrefs, "full_outer")
 
     def pick(c: String, ignoreNone: Boolean): Column =
       if (ignoreNone) coalesce(col(s"__n_$c"), col(c)).as(c)
-      else when(col(s"__n_$c").isNotNull || otherKeysPresent(renamed), col(s"__n_$c")).otherwise(col(c)).as(c)
+      else when(col("__n_present").isNotNull, col(s"__n_$c")).otherwise(col(c)).as(c)
 
     val cols = keyrefs.map(col) ++
       otherrefs.map(pick(_, ignoreNoneRefs)) ++
@@ -138,7 +138,4 @@ class AccumulatingSnapshotFactTable(
     state = materialize(factExpander(joined.select(cols: _*)))
     this
   }
-
-  private def otherKeysPresent(renamed: DataFrame): Column =
-    (otherrefs ++ measures).map(c => col(s"__n_$c").isNotNull).reduceOption(_ || _).getOrElse(lit(false))
 }

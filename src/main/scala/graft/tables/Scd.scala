@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.Joins
+import graft.core.{Joins, Scans}
 
 /** Type-1 slowly changing dimension: overwrite in place.
   *
@@ -31,11 +31,10 @@ class TypeOneScdDimension(
   def scdensure(updates: DataFrame, orderCol: Column,
                 namemapping: Map[String, String] = Map.empty): DataFrame = {
     val mapped = graft.core.Nm.applyMapping(updates, namemapping)
-    val w = Window.partitionBy(lookupatts.map(col): _*).orderBy(orderCol.desc)
     // materialized once: both the ensure below and the type-1 overwrite join
     // consume it — without this the batch window would compute twice
-    val latest = materialize(mapped
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn"))
+    val latest = materialize(
+      Scans.topPerGroup(mapped, lookupatts.map(col), Seq(orderCol.desc), 1))
 
     // new members: plain ensure (first=latest occurrence supplies attributes)
     ensure(latest)
@@ -149,9 +148,7 @@ class ScdDimension(
       .filter(col("__chg")).drop("__chg")
 
     // current version per member in the existing dimension
-    val wCur = Window.partitionBy(lk: _*).orderBy(newestFirst(col))
-    val dimCur = state
-      .withColumn("__crn", row_number().over(wCur)).filter(col("__crn") === 1).drop("__crn")
+    val dimCur = Scans.topPerGroup(state, lk, Seq(newestFirst(col)), 1)
     val curSide = dimCur.select(
       lk ++ type2atts.map(a => col(a).as(s"__cur_$a")) :+
         col(versionatt).as("__cur_ver") :+ col(toatt).as("__cur_to") :+
@@ -230,8 +227,7 @@ class ScdDimension(
     // Values come from the incoming batch, so members with type-1-only changes
     // (no new version inserted) still get updated — as in the reference.
     if (type1atts.nonEmpty) {
-      val wIn = Window.partitionBy(lk: _*).orderBy(col(fromatt).desc)
-      val t1vals = in.withColumn("__t1rn", row_number().over(wIn)).filter(col("__t1rn") === 1)
+      val t1vals = Scans.topPerGroup(in, lk, Seq(col(fromatt).desc), 1)
         .select(lk ++ type1atts.map(a => col(a).as(s"__t1_$a")) :+ lit(true).as("__t1m"): _*)
       val wLatest = Window.partitionBy(lk: _*).orderBy(newestFirst(col))
       val flagged = next.withColumn("__lrn", row_number().over(wLatest))

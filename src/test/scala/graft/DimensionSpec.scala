@@ -89,6 +89,42 @@ class DimensionSpec extends SparkSpec {
     assert(r.getLong(1) == 12L && r.getDouble(2) == 3.0, "latest merge row by orderCol must win")
   }
 
+  test("ensure orderCol: the earliest row per member supplies its non-lookup attributes") {
+    import spark.implicits._
+    val dim = new Dimension("d3d", "k", Seq("a", "b", "seq"), Seq("a"))
+    dim.init(Seq((0L, "z", "old", 0L)).toDF("k", "a", "b", "seq"))
+    dim.ensure(Seq(("x", "late", 3L), ("x", "early", 1L), ("x", "mid", 2L),
+        ("y", "only", 5L), ("z", "ignored", 0L)).toDF("a", "b", "seq"),
+      orderCol = Some(col("seq")))
+    val m = dim.current.collect().map(r => r.getString(1) -> (r.getString(2), r.getLong(3))).toMap
+    assert(m == Map("x" -> ("early", 1L), "y" -> ("only", 5L), "z" -> ("old", 0L)),
+      "first occurrence by orderCol must supply attributes; existing members stay")
+  }
+
+  test("ensure orderCol may read a column that is not an attribute (a source row id)") {
+    import spark.implicits._
+    val dim = new Dimension("d3e", "k", Seq("a", "b"), Seq("a"))
+    dim.init(Seq((0L, "z", "old")).toDF("k", "a", "b"))
+    dim.ensure(Seq(("x", "late", 3L), ("x", "early", 1L), ("y", "only", 5L))
+      .toDF("a", "b", "rowid"), orderCol = Some(col("rowid")))
+    val m = dim.current.collect().map(r => r.getString(1) -> r.getString(2)).toMap
+    assert(m == Map("x" -> "early", "y" -> "only", "z" -> "old"))
+  }
+
+  test("merge with ignoreNone* = false: an all-NULL incoming row clobbers like a partly-NULL one") {
+    import spark.implicits._
+    val fact = new AccumulatingSnapshotFactTable("af3", Seq("k"), Seq("r"), Seq("m"),
+      ignoreNoneRefs = false, ignoreNoneMeasures = false)
+    fact.init(Seq((1L, "r1", 10.0), (2L, "r2", 20.0), (3L, "r3", 30.0)).toDF("k", "r", "m"))
+    fact.merge(Seq[(Long, String, java.lang.Double)]((1L, null, null), (2L, null, 5.0))
+      .toDF("k", "r", "m"))
+    val got = fact.current.collect()
+      .map(r => r.getLong(0) -> (Option(r.getString(1)), Option(r.get(2)))).toMap
+    assert(got == Map(1L -> (None, None), 2L -> (None, Some(5.0)),
+      3L -> (Some("r3"), Some(30.0))),
+      "an incoming row is present whatever its values; absent keys keep theirs")
+  }
+
   test("getByKey/getByVals accept namemapping") {
     import spark.implicits._
     val dim = new Dimension("d5nm", "k", Seq("a"), Seq("a"))

@@ -88,6 +88,17 @@ class SamplingSpec extends SparkSpec {
     assert(again == out.select("doc_id").collect().map(_.getLong(0)).toSet)
   }
 
+  test("weightedSample and stratifiedSample reject an empty group instead of one global window") {
+    val docs = table("documents")
+    val ws = intercept[IllegalArgumentException] {
+      Sampling.weightedSample(docs, Nil, "doc_id", lit(1.0), k = 3)
+    }
+    val ss = intercept[IllegalArgumentException] {
+      Sampling.stratifiedSample(docs, Nil, "doc_id", 3)
+    }
+    assert(ws.getMessage.contains("empty group") && ss.getMessage.contains("empty group"))
+  }
+
   test("leakageSafeSplit: near-dup pairs never straddle a split boundary") {
     import graft.functions.Dedup
     val docs = table("documents")
